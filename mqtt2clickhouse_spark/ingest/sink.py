@@ -46,7 +46,9 @@ without ``seq``, the majority type wins (tie → Float64).
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 from dataclasses import dataclass, field
 
@@ -278,30 +280,48 @@ class DemuxSink:
         return tbl.column(0)[0].as_py() if tbl.num_rows else None
 
     # ------------------------------------------------------------------
-    def write_batch(self, valid: DataFrame, dead: DataFrame | None = None) -> dict:
-        """Route one batch.  ``valid`` must carry PARSED_COLUMNS (and
-        optionally ``seq``).  Returns counters for observability.
-
-        Runs three passes over ``valid``/``dead`` (census, accepted
-        write, dead-letter) — callers with a non-trivial upstream should
-        hand in persisted frames, as ``foreach_batch`` does."""
-        has_seq = "seq" in valid.columns
-
-        # 1. Decide the schema for tables not yet registered.  The
-        #    per-table type census is tiny (one row per *sensor*, not per
-        #    message) so collecting it to the driver is O(#sensors) —
-        #    the same cardinality the reference held in its in-memory
-        #    cache (/root/reference/db/db.go:15).
-        census = (
-            valid.groupBy("table_name", "value_type")
-            .agg(
-                (F.min("seq") if has_seq else F.count(F.lit(1))).alias("ord"),
-                F.count(F.lit(1)).alias("n"),
-            )
+    @staticmethod
+    def _census(keyed: DataFrame) -> list:
+        """One row per (reject_reason, table_name, value_type) with the
+        lowest ``seq`` (``ord``) and the row count (``n``): O(#sensors),
+        the cardinality the reference held in its in-memory cache
+        (reference db/db.go:15), and enough to route the batch."""
+        first = F.min("seq") if "seq" in keyed.columns else F.lit(None)
+        return (
+            keyed.groupBy("reject_reason", "table_name", "value_type")
+            .agg(first.alias("ord"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
+
+    def write_batch(
+        self, valid: DataFrame, dead: DataFrame | None = None, *, census=None
+    ) -> dict:
+        """Route one batch.  ``valid`` must carry PARSED_COLUMNS (and
+        optionally ``seq``); ``dead`` holds parse rejects (``topic``,
+        ``payload``, ``reject_reason``).  Returns counters for
+        observability.
+
+        One census job decides the whole batch on the driver; then one
+        pass writes the accepted rows and, only when the census shows
+        rejects, a concurrent one appends the dead letters.  Callers
+        with a non-trivial upstream should hand in persisted frames, as
+        ``foreach_batch`` does; it also passes ``census``, the
+        ``_census`` of exactly these rows, taken in one scan of its
+        frame."""
+        has_seq = "seq" in valid.columns
+        if census is None:
+            keyed = valid.withColumn("reject_reason", F.lit(None).cast("string"))
+            if dead is not None:
+                keyed = keyed.unionByName(
+                    dead.select("reject_reason"), allowMissingColumns=True
+                )
+            census = self._census(keyed)
+        n_parse_dead = sum(r["n"] for r in census if r["reject_reason"] is not None)
+        types = [r for r in census if r["reject_reason"] is None]
+
+        # 1. Decide the schema for tables not yet registered.
         new_tables: dict[str, tuple] = {}
-        for row in census:
+        for row in types:
             if self.registry.value_type(row["table_name"]) is not None:
                 continue
             # first-by-seq wins; else majority, tie → Float64
@@ -315,53 +335,33 @@ class DemuxSink:
         for table, (_, vtype) in new_tables.items():
             self.registry.register(table, vtype)
 
-        # 2. Split accepted vs schema-mismatch via a broadcast-joined
-        #    expectation map (no per-row Python).
-        expect = self.spark.createDataFrame(
-            [(t, s[-1]) for t, s in self.registry.schemas.items()],
-            "table_name string, expected_type string",
-        )
-        annotated = valid.join(F.broadcast(expect), "table_name", "left")
-        accepted = annotated.filter(F.col("value_type") == F.col("expected_type")).drop(
-            "expected_type"
-        )
-        mismatched = annotated.filter(
-            F.col("value_type") != F.col("expected_type")
-        ).drop("expected_type")
-
-        # All routing counters derive from the census already on the
-        # driver — no extra counting jobs over the batch:
-        n_accepted = sum(
-            row["n"]
-            for row in census
-            if self.registry.value_type(row["table_name"]) == row["value_type"]
-        )
-        n_mismatch = sum(row["n"] for row in census) - n_accepted
-        accepted_tables = sorted(
-            {
-                row["table_name"]
-                for row in census
-                if self.registry.value_type(row["table_name"]) == row["value_type"]
-            }
-        )
-
-        # 3 + 4. The accepted write and the dead-letter path are
-        #    independent scans of the (persisted) batch — submit them
-        #    CONCURRENTLY so batch latency is max(write, dead), not the
-        #    sum (measured 2.2s → ~1.5s per 100k-message batch; Spark
-        #    schedules jobs from multiple threads fine).  The parse
-        #    rejects need the one remaining count (their cardinality is
-        #    not in the census); it rides the dead-letter thread.
-        def run_dead() -> int:
-            n_parse_dead = dead.count() if dead is not None else 0
-            nd = n_parse_dead + n_mismatch
-            if nd:
-                dead_parts = []
-                if dead is not None:
-                    dead_parts.append(
-                        dead.select("topic", "payload", "reject_reason")
-                    )
-                dl = mismatched.select(
+        # 2. Split accepted vs schema-mismatch on the driver: every table
+        #    is registered now, so a row is a mismatch iff the census
+        #    flags its (table, type) pair.  Usually none is, and the
+        #    accepted frame is ``valid`` itself, unfiltered.
+        mismatched: dict[str, list[str]] = {}
+        n_mismatch, accepted_tables = 0, set()
+        for row in types:
+            if self.registry.value_type(row["table_name"]) == row["value_type"]:
+                accepted_tables.add(row["table_name"])
+            else:
+                mismatched.setdefault(row["value_type"], []).append(row["table_name"])
+                n_mismatch += row["n"]
+        n_accepted = sum(r["n"] for r in types) - n_mismatch
+        accepted, dead_parts = valid, []
+        if n_parse_dead:
+            dead_parts.append(dead.select("topic", "payload", "reject_reason"))
+        if mismatched:
+            is_mismatch = functools.reduce(
+                operator.or_,
+                [
+                    (F.col("value_type") == vtype) & F.col("table_name").isin(tables)
+                    for vtype, tables in mismatched.items()
+                ],
+            )
+            accepted = valid.filter(~is_mismatch)
+            dead_parts.append(
+                valid.filter(is_mismatch).select(
                     F.concat_ws(
                         "/", F.lit(""), "client", "device", F.lit("..."), "table_name"
                     ).alias("topic"),
@@ -370,28 +370,36 @@ class DemuxSink:
                     ).alias("payload"),
                     F.lit(REASON_SCHEMA_MISMATCH).alias("reject_reason"),
                 )
-                dead_parts.append(dl)
-                dead_all = dead_parts[0]
-                for p in dead_parts[1:]:
-                    dead_all = dead_all.unionByName(p)
-                # rejects are a small fraction of the batch: coalesce so
-                # the append writes a handful of files, not one per
-                # upstream partition per branch (measured 0.77s → ~0.3s,
-                # and ~8 files/batch instead of ~64)
-                dead_all.coalesce(8).write.mode("append").format(
-                    self.file_format
-                ).save(os.path.join(self.warehouse_dir, DEAD_LETTER_TABLE))
-            return nd
+            )
 
+        # 3. The accepted write, with the dead-letter append — when there
+        #    are rejects — submitted CONCURRENTLY: the two are
+        #    independent scans of the (persisted) batch, so its latency
+        #    is max(write, dead), not the sum.
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            dead_future = pool.submit(run_dead)
-            self._write_accepted(accepted, n_accepted, accepted_tables)
-            n_dead = dead_future.result()
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            dead_written = (
+                pool.submit(self._write_dead_letter, dead_parts) if dead_parts else None
+            )
+            self._write_accepted(accepted, n_accepted, sorted(accepted_tables))
+            if dead_written is not None:
+                dead_written.result()
 
         self.registry.save(self._registry_path())
+        n_dead = n_parse_dead + n_mismatch
         return {"accepted": n_accepted, "dead_letter": n_dead, "new_tables": len(new_tables)}
+
+    def _write_dead_letter(self, parts: list[DataFrame]) -> None:
+        # rejects are a small fraction of the batch: coalesce so the
+        # append writes a handful of files, not one per upstream
+        # partition per branch (measured 0.77s → ~0.3s, and ~8
+        # files/batch instead of ~64)
+        functools.reduce(DataFrame.unionByName, parts).coalesce(8).write.mode(
+            "append"
+        ).format(self.file_format).save(
+            os.path.join(self.warehouse_dir, DEAD_LETTER_TABLE)
+        )
 
     # ------------------------------------------------------------------
     def _write_accepted(
@@ -455,9 +463,9 @@ class DemuxSink:
         (topic, payload[, seq]) rows: parse then route.
 
         The classified frame is cached for the batch: write_batch runs
-        several actions (type census, accepted write, dead-letter count)
-        and without the cache each one would re-run the VARIANT parse of
-        the whole micro-batch."""
+        up to three actions over it (census, accepted write, dead-letter
+        append) and without the cache each one would re-run the VARIANT
+        parse of the whole micro-batch."""
         from mqtt2clickhouse_spark.ingest.parse import parse_messages_single
 
         classified = parse_messages_single(batch_df).persist()
@@ -469,7 +477,7 @@ class DemuxSink:
             dead = classified.filter(F.col("reject_reason").isNotNull()).select(
                 "topic", "payload", "reject_reason"
             )
-            self.write_batch(valid, dead)
+            self.write_batch(valid, dead, census=self._census(classified))
         finally:
             classified.unpersist()
 

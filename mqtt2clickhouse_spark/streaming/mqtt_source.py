@@ -6,8 +6,10 @@ Reference behavior reproduced (SURVEY.md §2.1 S1-S4, L3):
 - bounded in-flight buffer of 300 messages — the reference's
   ``DataChannel = make(chan *Message, 300)``
   (/root/reference/message/message.go:17): when the buffer is full the
-  oldest messages are dropped only after delivery, the paho callback
-  blocks via the queue's own bound;
+  paho callback blocks via the queue's own bound (backpressure to the
+  broker, never message loss).  The 300 slots bound the BUFFER, not the
+  micro-batch: ``read`` drains for its 1 s window, so a backlog lands in
+  one batch per trigger and pays the sink's fixed per-batch cost once;
 - broker URL scheme ssl iff port 8883
   (/root/reference/client/client.go:86-99), username/password auth
   (client.go:102-105).  The reference's ``InsecureSkipVerify: true``
@@ -33,6 +35,7 @@ TCP/TLS broker.
 from __future__ import annotations
 
 import json
+import math
 import queue
 import time
 from collections.abc import Iterator
@@ -129,7 +132,10 @@ class MqttDataSource(DataSource):
       tls_config: JSON file in the reference's configTLS.json shape
                  (caPath/certPath/keyPath) — an alternative to the three
                  individual path options
-      batch_size: max messages per micro-batch (fake + live drain cap)
+      batch_size: max messages per micro-batch.  Fake readers: default
+                 50.  Live reader: no cap by default — the 1 s drain
+                 window bounds the batch and the 300-slot buffer bounds
+                 memory; set it to cap a live batch explicitly
     """
 
     @classmethod
@@ -253,7 +259,8 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
             from mqtt2clickhouse_spark.streaming import mqtt_wire as mqtt
         self._mqtt = mqtt
         self.options = options
-        self.batch_size = int(options.get("batch_size", BUFFER_CAPACITY))
+        cap = options.get("batch_size")
+        self.batch_size = int(cap) if cap is not None else math.inf
         self.buffer: queue.Queue = queue.Queue(maxsize=BUFFER_CAPACITY)
         self._seq = 0
         self._replay: dict[int, tuple] = {}
@@ -264,8 +271,9 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
         """Spark's planner worker pickles the reader when shipping the
         read function to executors; live transport state (socket,
         network thread, queue/client locks) must not travel.  A
-        restored copy carries the offset counter and the bounded replay
-        window (plain dict — readBetweenOffsets needs nothing else)
+        restored copy carries the offset counter and the replay window
+        of uncommitted rows (plain dict — readBetweenOffsets needs
+        nothing else)
         and re-creates an empty buffer; if read() is ever called on it,
         it reconnects lazily."""
         state = self.__dict__.copy()
@@ -386,11 +394,13 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
             self._replay[self._seq] = row
             self._seq += 1
             rows.append(row)
-        # retain a bounded replay window for readBetweenOffsets retries
-        for k in list(self._replay):
-            if k < self._seq - 10 * BUFFER_CAPACITY:
-                del self._replay[k]
         return iter(rows), {"seq": self._seq}
+
+    def commit(self, end: dict) -> None:
+        # the replay window holds exactly the uncommitted seqs, however
+        # many rows one time-bounded read took
+        for k in [k for k in self._replay if k < end["seq"]]:
+            del self._replay[k]
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # best-effort replay from the retained window; MQTT has no log —

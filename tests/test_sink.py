@@ -255,6 +255,42 @@ def test_many_tables_batch_keeps_one_file_per_table(spark, tmp_path):
     )
 
 
+def test_clean_batch_runs_census_and_accepted_write_only(spark, tmp_path):
+    """A multi-table batch with no rejects costs one census and the
+    accepted write: no per-batch registry frame or join, no reject
+    count, no dead-letter pass.  So at most 5 Spark jobs, and no
+    ``_dead_letter`` directory appears."""
+    import json as _json
+    import os
+
+    from mqtt2clickhouse_spark.ingest.sink import DEAD_LETTER_TABLE
+
+    msgs = [
+        (
+            f"/c0/dev{i % 2}/out/sensors/s{i % 12}",
+            _json.dumps({"value": "on" if i % 12 == 0 else float(i)}),
+            i,
+        )
+        for i in range(240)
+    ]
+    df = spark.createDataFrame(msgs, "topic string, payload string, seq long")
+    wh = tmp_path / "wh"
+    sink = DemuxSink(spark, str(wh))
+    sc = spark.sparkContext
+    sc.setJobGroup("clean_batch", "one clean foreach_batch")
+    try:
+        sink.foreach_batch(df, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("clean_batch")
+    assert 1 <= len(jobs) <= 5, f"{len(jobs)} Spark jobs for one clean batch"
+    assert not os.path.exists(wh / DEAD_LETTER_TABLE)
+    assert sink.list_tables() == sorted(f"s{i}" for i in range(12))
+    assert sink.table_schema("s0") == ["String", "String", "String"]
+    assert sink.read_table("s0").count() == 20
+    assert spark.read.parquet(str(wh / "readings")).count() == 240
+
+
 def test_routing_matches_reference_model(spark):
     """Model-based fuzz of the routing semantics against a pure-Python
     reference model (db/db.go:147-243 as SURVEY §1.4 specifies them):

@@ -1013,6 +1013,111 @@ def test_live_reader_protocol_loopback(monkeypatch):
     assert list(rows3) == [] and off3 == {"seq": 7}
 
 
+def _fake_paho_live_reader(monkeypatch):
+    """A LiveMqttStreamReader over a paho stand-in that does nothing:
+    messages enter through the real ``_on_message`` callback only."""
+    import sys
+    import types
+
+    class FakeClient:
+        def __init__(self, *a, **k):
+            self.on_message = None
+
+        def connect(self, host, port):
+            pass
+
+        def subscribe(self, topic, qos=0):
+            pass
+
+        def loop_start(self):
+            pass
+
+    fake_client_mod = types.ModuleType("paho.mqtt.client")
+    fake_client_mod.Client = FakeClient
+    fake_mqtt = types.ModuleType("paho.mqtt")
+    fake_mqtt.client = fake_client_mod
+    fake_paho = types.ModuleType("paho")
+    fake_paho.mqtt = fake_mqtt
+    monkeypatch.setitem(sys.modules, "paho", fake_paho)
+    monkeypatch.setitem(sys.modules, "paho.mqtt", fake_mqtt)
+    monkeypatch.setitem(sys.modules, "paho.mqtt.client", fake_client_mod)
+    from mqtt2clickhouse_spark.streaming.mqtt_source import LiveMqttStreamReader
+
+    return LiveMqttStreamReader(
+        {"broker": "broker.example", "port": "1883", "topics": "/a/#"}
+    )
+
+
+def _deliver_in_background(reader, n):
+    """Deliver ``n`` messages the way the network thread does: each
+    ``_on_message`` blocks while the 300-slot buffer is full."""
+    import threading
+    from types import SimpleNamespace
+
+    def deliver():
+        for i in range(n):
+            msg = SimpleNamespace(
+                topic=f"/c/d/out/sensors/t{i % 7}", payload=b'{"value": %d}' % i
+            )
+            reader._on_message(reader.client, None, msg)
+
+    producer = threading.Thread(target=deliver, daemon=True)
+    producer.start()
+    return producer
+
+
+def test_live_reader_batch_is_bounded_by_time_not_buffer(monkeypatch):
+    """The 300 slots bound the buffer (backpressure), not the batch:
+    with no ``batch_size``, one read keeps draining for its 1 s window
+    while the blocked producer refills the buffer, so a backlog lands in
+    one batch larger than BUFFER_CAPACITY — densely numbered, in
+    delivery order, nothing lost."""
+    from mqtt2clickhouse_spark.streaming.mqtt_source import BUFFER_CAPACITY
+
+    reader = _fake_paho_live_reader(monkeypatch)
+    assert reader.buffer.maxsize == BUFFER_CAPACITY == 300
+    n = 2 * BUFFER_CAPACITY + 50
+    producer = _deliver_in_background(reader, n)
+    deadline = time.monotonic() + 10
+    while not reader.buffer.full() and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert reader.buffer.full()  # the producer is blocked on the bound
+
+    rows, off = reader.read({"seq": 0})
+    rows = list(rows)
+    assert len(rows) > BUFFER_CAPACITY
+    producer.join(timeout=10)
+    assert not producer.is_alive()
+    while off["seq"] < n and time.monotonic() < deadline:
+        more, off = reader.read(off)
+        rows += list(more)
+    assert [r[2] for r in rows] == list(range(n))
+    assert [json.loads(r[1])["value"] for r in rows] == list(range(n))
+
+
+def test_live_reader_replays_a_large_batch_until_commit(monkeypatch):
+    """A time-bounded batch can hold more rows than any fixed replay
+    window: one read of more than 10 x BUFFER_CAPACITY rows must replay
+    in full until Spark commits it, and the commit empties the window
+    of every row it covers."""
+    from mqtt2clickhouse_spark.streaming.mqtt_source import BUFFER_CAPACITY
+
+    reader = _fake_paho_live_reader(monkeypatch)
+    n = 10 * BUFFER_CAPACITY + 500
+    producer = _deliver_in_background(reader, n)
+    rows, off = reader.read({"seq": 0})
+    rows = list(rows)
+    producer.join(timeout=10)
+    assert not producer.is_alive()
+    assert len(rows) > 10 * BUFFER_CAPACITY
+    assert off == {"seq": len(rows)}
+
+    assert list(reader.readBetweenOffsets({"seq": 0}, off)) == rows
+    reader.commit(off)
+    assert reader._replay == {}
+    assert list(reader.readBetweenOffsets({"seq": 0}, off)) == []
+
+
 # ---------------------------------------------------------------------------
 # Continuous aggregate (RollupSink).  The events fixture is SPARSE in
 # time (~530 distinct hours for 1000 rows), so tests bucket by 7 days
