@@ -420,10 +420,13 @@ class DemuxSink:
             # a plain hash repartition lands a hot sensor's 90% of the
             # batch in ONE writer task — the single-core bottleneck at
             # the 100 TB feed.  The AQE rebalance keeps the ~#tables
-            # file count (and coalesces tiny cold tables), but SPLITS
-            # any table partition above the advisory size into
-            # byte-bounded writer tasks, so a hot table costs extra
-            # files, never a straggler.
+            # file count and coalesces tiny cold tables into shared
+            # writer tasks: on a plain session, into one task per
+            # 1 MiB; inside ``run_ingest_stream``, which drops that
+            # floor, into about one task per core.  It SPLITS any table
+            # partition above the advisory size into byte-bounded
+            # writer tasks, so a hot table costs extra files, never a
+            # straggler.
             (
                 accepted.hint("rebalance", "table_name")
                 .write.mode("append")

@@ -8,8 +8,12 @@ Reference behavior reproduced (SURVEY.md §2.1 S1-S4, L3):
   (/root/reference/message/message.go:17): when the buffer is full the
   paho callback blocks via the queue's own bound (backpressure to the
   broker, never message loss).  The 300 slots bound the BUFFER, not the
-  micro-batch: ``read`` drains for its 1 s window, so a backlog lands in
-  one batch per trigger and pays the sink's fixed per-batch cost once;
+  micro-batch: ``read`` waits up to 1 s for a first message, then drains
+  until one 0.1 s poll finds the buffer empty (the burst is over) or the
+  1 s window closes.  A backlog lands in one batch per trigger and pays
+  the sink's fixed per-batch cost once, without holding the trigger for
+  the rest of the window; a steady stream with gaps under 0.1 s still
+  reads to the deadline;
 - broker URL scheme ssl iff port 8883
   (/root/reference/client/client.go:86-99), username/password auth
   (client.go:102-105).  The reference's ``InsecureSkipVerify: true``
@@ -133,8 +137,9 @@ class MqttDataSource(DataSource):
                  (caPath/certPath/keyPath) — an alternative to the three
                  individual path options
       batch_size: max messages per micro-batch.  Fake readers: default
-                 50.  Live reader: no cap by default — the 1 s drain
-                 window bounds the batch and the 300-slot buffer bounds
+                 50.  Live reader: no cap by default — the drain ends
+                 when the burst does (one empty 0.1 s poll after the
+                 first row) or at 1 s, and the 300-slot buffer bounds
                  memory; set it to cap a live batch explicitly
     """
 
@@ -389,6 +394,8 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
             try:
                 topic, payload = self.buffer.get(timeout=0.1)
             except queue.Empty:
+                if rows:
+                    break  # the burst has drained
                 continue
             row = (topic, payload, self._seq, datetime.now(tz=timezone.utc))
             self._replay[self._seq] = row

@@ -43,11 +43,28 @@ def run_ingest_stream(
     ``sink`` is a DemuxSink; its ``foreach_batch`` parses and routes each
     micro-batch (create-on-first-write + positional schema checks +
     dead-letter).  Checkpointing makes the source effectively-once up to
-    sink idempotence."""
+    sink idempotence.
+
+    Each batch runs in the per-query session Spark clones at ``start()``,
+    and this stream lowers that session's AQE ``minPartitionSize`` to one
+    byte.  A micro-batch's shuffles are far below the 1 MiB default, so
+    AQE would coalesce the accepted write's REBALANCE into ONE task that
+    creates every table's file in turn; with the floor gone AQE sizes a
+    small shuffle at total bytes / ``defaultParallelism``, and the write
+    runs about one task per core.  Shuffles over cores x 1 MiB coalesce
+    as before, each table still lands in one writer unless the skew
+    split cuts a hot one, and the caller's session keeps its setting."""
+
+    def foreach_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.sparkSession.conf.set(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b"
+        )
+        sink.foreach_batch(batch_df, epoch_id)
+
     writer = (
         source.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink.foreach_batch)
+        .foreachBatch(foreach_batch)
     )
     if trigger_once:
         writer = writer.trigger(availableNow=True)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Isolated per-query profiling: min-of-N noop-sink wall time plus a
-per-Spark-job breakdown (DAGScheduler 'Job N finished ... took S s'
-lines routed through log4j) for the LAST pass.
+"""Isolated per-query profiling: min-of-N noop-sink wall time plus the
+number of Spark jobs the LAST pass ran (each pass runs in its own job
+group).
 
 Usage: PYTHONPATH=. python scripts/profile_query.py q1 [q2 ...] [--passes 3]
 """
@@ -31,20 +31,26 @@ def main() -> None:
 
     from bench import _release_session_state
 
+    sc = spark.sparkContext
     for name in names:
         spec = QUERIES[name]
         best = float("inf")
         times = []
-        for _ in range(passes):
+        for i in range(passes):
+            # one job group per pass, so the count below covers the last
+            # pass of this query only
+            group = f"profile:{name}:{i}"
+            sc.setJobGroup(group, f"{name} pass {i + 1}/{passes}")
             t0 = time.perf_counter()
             df = spec.spark_fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
             times.append(round(dt, 3))
             best = min(best, dt)
             _release_session_state(spark)
-        tracker = spark.sparkContext.statusTracker()
-        print(f"{name}: min {best:.3f}s  passes={times}  jobs_total={len(tracker.getJobIdsForGroup(None) or [])}")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        print(f"{name}: min {best:.3f}s  passes={times}  jobs_last_pass={len(jobs)}")
 
 
 if __name__ == "__main__":

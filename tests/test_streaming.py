@@ -1068,10 +1068,10 @@ def _deliver_in_background(reader, n):
 
 def test_live_reader_batch_is_bounded_by_time_not_buffer(monkeypatch):
     """The 300 slots bound the buffer (backpressure), not the batch:
-    with no ``batch_size``, one read keeps draining for its 1 s window
-    while the blocked producer refills the buffer, so a backlog lands in
-    one batch larger than BUFFER_CAPACITY — densely numbered, in
-    delivery order, nothing lost."""
+    with no ``batch_size``, one read keeps draining while the blocked
+    producer refills the buffer, so a backlog lands in one batch larger
+    than BUFFER_CAPACITY — densely numbered, in delivery order, nothing
+    lost."""
     from mqtt2clickhouse_spark.streaming.mqtt_source import BUFFER_CAPACITY
 
     reader = _fake_paho_live_reader(monkeypatch)
@@ -1093,6 +1093,130 @@ def test_live_reader_batch_is_bounded_by_time_not_buffer(monkeypatch):
         rows += list(more)
     assert [r[2] for r in rows] == list(range(n))
     assert [json.loads(r[1])["value"] for r in rows] == list(range(n))
+
+
+def test_live_reader_read_ends_when_the_burst_drains(monkeypatch):
+    """A backlog read returns once the burst is over, not at the 1 s
+    deadline: more than BUFFER_CAPACITY messages queued behind a full
+    buffer come back in one read, densely numbered, and the read ends
+    after one empty 0.1 s poll."""
+    from mqtt2clickhouse_spark.streaming.mqtt_source import BUFFER_CAPACITY
+
+    reader = _fake_paho_live_reader(monkeypatch)
+    n = 2 * BUFFER_CAPACITY + 50
+    producer = _deliver_in_background(reader, n)
+    deadline = time.monotonic() + 10
+    while not reader.buffer.full() and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert reader.buffer.full()
+
+    t0 = time.monotonic()
+    rows, off = reader.read({"seq": 0})
+    elapsed = time.monotonic() - t0
+    rows = list(rows)
+    assert len(rows) > BUFFER_CAPACITY
+    assert elapsed < 0.5, f"a drained burst held the read for {elapsed:.2f} s"
+    producer.join(timeout=10)
+    assert not producer.is_alive()
+    while off["seq"] < n and time.monotonic() < deadline:
+        more, off = reader.read(off)
+        rows += list(more)
+    assert [r[2] for r in rows] == list(range(n))
+
+
+def test_live_reader_trickle_reads_to_the_deadline(monkeypatch):
+    """A steady stream with gaps shorter than the 0.1 s poll never
+    drains the buffer for a whole poll, so the read stays open until
+    its 1 s deadline and takes every message of the window."""
+    import threading
+    from types import SimpleNamespace
+
+    reader = _fake_paho_live_reader(monkeypatch)
+    stop = threading.Event()
+
+    def trickle():
+        i = 0
+        while not stop.wait(0.04):
+            msg = SimpleNamespace(topic="/c/d/out/sensors/t", payload=b'{"value": %d}' % i)
+            reader._on_message(reader.client, None, msg)
+            i += 1
+
+    producer = threading.Thread(target=trickle, daemon=True)
+    producer.start()
+    try:
+        t0 = time.monotonic()
+        rows, off = reader.read({"seq": 0})
+        elapsed = time.monotonic() - t0
+    finally:
+        stop.set()
+        producer.join(timeout=5)
+    assert not producer.is_alive()
+    rows = list(rows)
+    assert elapsed >= 0.9, f"a trickle ended the read after {elapsed:.2f} s"
+    assert len(rows) >= 10
+    assert [r[2] for r in rows] == list(range(len(rows))) and off == {"seq": len(rows)}
+
+
+def test_live_reader_idle_read_waits_the_full_window(monkeypatch):
+    """With nothing buffered the read waits its whole second for a first
+    message, then returns no rows and leaves the offset where it was."""
+    reader = _fake_paho_live_reader(monkeypatch)
+    t0 = time.monotonic()
+    rows, off = reader.read({"seq": 0})
+    elapsed = time.monotonic() - t0
+    assert list(rows) == [] and off == {"seq": 0}
+    assert elapsed >= 0.95, f"an idle read returned after {elapsed:.2f} s"
+
+
+def test_ingest_stream_spreads_accepted_write_over_cores(spark, tmp_path):
+    """Inside ``run_ingest_stream`` the accepted write's REBALANCE is not
+    coalesced into one task: the stream's session drops AQE's 1 MiB
+    ``minPartitionSize`` floor, so a small batch over many tables writes
+    from several tasks.  Each table still gets exactly one file, and the
+    caller's session keeps its own setting."""
+    import glob
+    import os
+    from collections import Counter
+
+    min_size = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+    d = tmp_path / "msgs"
+    d.mkdir()
+    n_tables = 24
+    (d / "a.json").write_text(
+        "\n".join(
+            json.dumps(
+                {
+                    "topic": f"/c0/dev0/out/sensors/t{i % n_tables}",
+                    "payload": json.dumps({"value": float(i)}),
+                    "seq": i,
+                    "ingest_ts": "2024-01-01T00:00:00.000Z",
+                }
+            )
+            for i in range(10 * n_tables)
+        )
+    )
+    before = spark.conf.get(min_size)
+    sink = DemuxSink(spark, str(tmp_path / "wh"))
+    q = run_ingest_stream(
+        stream_messages_from_dir(spark, str(d)), sink, str(tmp_path / "ckpt"),
+        trigger_once=True,
+    )
+    assert q.awaitTermination(120)
+
+    # Structured Streaming runs every job of the query in the job group
+    # named by its runId.  A clean batch's last job is the accepted
+    # write, and that job's last stage is the one that writes the files.
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(str(q.runId)))
+    write_stage = max(tracker.getJobInfo(last_job).stageIds)
+    n_tasks = tracker.getStageInfo(write_stage).numTasks
+    assert n_tasks > 1, "the accepted write ran as a single task"
+
+    files = glob.glob(str(tmp_path / "wh" / "readings" / "table_name=*" / "*.parquet"))
+    per_table = Counter(os.path.basename(os.path.dirname(f)) for f in files)
+    assert per_table == {f"table_name=t{i}": 1 for i in range(n_tables)}
+    assert spark.conf.get(min_size) == before
 
 
 def test_live_reader_replays_a_large_batch_until_commit(monkeypatch):
