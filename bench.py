@@ -43,107 +43,19 @@ _R01_SURFACE = frozenset({
 })
 
 
-def _plan_digest() -> str:
-    """One hash over every registered query's plan fingerprint — the
-    SAME fingerprints the attestation ledger stamps (reused from
-    plan_window.current_hashes so the two can never drift): bench
-    artifacts with equal digests measured the SAME set of plans, so
-    folding their per-query times compares like with like."""
+def _source_digest() -> str:
+    """First 16 hex digits of one sha256 over the sorted relative paths
+    and bytes of every ``.py`` in the package: two runs with equal
+    digests measured the same code."""
     import hashlib
+    import pathlib
 
-    # path side effect confined to the one caller that needs it (r12
-    # review: a module-level insert made scripts/*.py shadow top-level
-    # names for every importer of bench)
-    scripts_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "scripts"
-    )
-    if scripts_dir not in sys.path:
-        sys.path.insert(0, scripts_dir)
-    from plan_window import current_hashes
-
+    root = pathlib.Path(__file__).resolve().parent
     h = hashlib.sha256()
-    for name, ph in sorted(current_hashes().items()):
-        h.update(name.encode())
-        h.update(ph.encode())
+    for path in sorted(root.glob("mqtt2clickhouse_spark/**/*.py")):
+        h.update(path.relative_to(root).as_posix().encode())
+        h.update(path.read_bytes())
     return h.hexdigest()[:16]
-
-
-def _clean_reference(
-    artifact_dir: str,
-    sf: float,
-    this_run: dict[str, float] | None = None,
-    digest: str | None = None,
-) -> dict | None:
-    """Per-query MIN over the repo's committed CLEAN-BOX bench artifacts
-    (VERDICT r11 ask #2): the driver's committed reading has been taken
-    warm/loaded three rounds running, so round-over-round per-query
-    deltas off it compare incompatible regimes.  This folds the round's
-    clean-box runs (`bench_artifacts/BENCH_r*cleanbox*.json`,
-    ``loaded_box: false``, same sf) into a sibling table the committed
-    artifact always carries.  Selection: artifacts whose ``plan_digest``
-    matches the live tree's are preferred (same plans by construction —
-    a faster OLD plan can never shadow the shipped one, even for
-    mid-round rewrites); when none match, fall back to the HIGHEST
-    round tag found and say so (``digest_match: false``).  ``this_run``
-    is folded in as source "this_run" when the live run is itself
-    clean."""
-    import glob
-    import re
-
-    pat = os.path.join(artifact_dir, "BENCH_r*cleanbox*.json")
-    by_round: dict[int, list[tuple[str, dict]]] = {}
-    matching: list[tuple[str, dict]] = []
-    for path in sorted(glob.glob(pat)):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        if not m:
-            continue
-        try:
-            data = json.loads(open(path).read())
-        except (OSError, json.JSONDecodeError):
-            continue
-        if data.get("loaded_box") or data.get("sf") != sf:
-            continue
-        if not isinstance(data.get("queries"), dict):
-            continue
-        entry = (os.path.basename(path), data)
-        if digest is not None and data.get("plan_digest") == digest:
-            matching.append(entry)
-        by_round.setdefault(int(m.group(1)), []).append(entry)
-    if matching:
-        picked = matching
-    elif by_round:
-        picked = by_round[max(by_round)]
-    else:
-        picked = []
-    sources: list[tuple[str, dict[str, float]]] = [
-        (n, d["queries"]) for n, d in picked
-    ]
-    if this_run is not None:
-        sources.append(("this_run", this_run))
-    if not sources:
-        return None
-    # three-state (r12 review): None = no digest check was requested;
-    # True = every folded source measured the live plans; False = the
-    # fallback folded sources that may predate a rewrite
-    digest_match: bool | None = None
-    if digest is not None:
-        digest_match = bool(matching) or (
-            not picked and this_run is not None
-        )
-    mins: dict[str, float] = {}
-    for _, qs in sources:
-        for k, v in qs.items():
-            if isinstance(v, (int, float)):
-                mins[k] = min(mins.get(k, float("inf")), v)
-    return {
-        "queries": {k: round(v, 3) for k, v in sorted(mins.items())},
-        "subtotal_r01_surface": round(
-            sum(v for k, v in mins.items() if k in _R01_SURFACE), 3
-        ),
-        "sources": [n for n, _ in sources],
-        "n_runs": len(sources),
-        "digest_match": digest_match,
-    }
 
 
 def _release_session_state(spark) -> None:
@@ -336,21 +248,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # Clean-regime sibling table (VERDICT r11 ask #2): fold the round's
-    # committed clean-box artifacts (plus this run when it is itself
-    # clean) into per-query MINs, so the committed artifact carries
-    # comparable-regime numbers even when the live reading is warm/
-    # loaded.  Cross-round per-query deltas should read clean_reference,
-    # not "queries", whenever loaded_box is true.
-    plan_digest = _plan_digest()
-    clean_ref = _clean_reference(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_artifacts"),
-        sf,
-        this_run=None if loaded else timings,
-        digest=plan_digest,
-    )
-
     total = round(sum(timings.values()), 3)
     # The round-1 bench covered 51 queries; later rounds add more, which
     # grows the total even when every query got faster.  Emit the
@@ -377,8 +274,11 @@ def main() -> None:
                 "recheck_session": "warm-end-of-suite",
                 "recheck_slowest": recheck,
                 "calibration": calibration,
-                "clean_reference": clean_ref,
-                "plan_digest": plan_digest,
+                "clean_reference": None if loaded else {
+                    "queries": timings,
+                    "subtotal_r01_surface": subtotal_r01,
+                },
+                "plan_digest": _source_digest(),
                 "sf": sf,
             }
         )

@@ -130,8 +130,9 @@ class DemuxSink:
 
     Use ``write_batch`` directly for batch pipelines, or pass
     ``sink.foreach_batch`` to ``DataStreamWriter.foreachBatch`` for
-    streaming (checkpointing makes the whole pipeline effectively-once
-    together with source-side dedup; see streaming.pipeline).
+    streaming.  ``foreach_batch`` ignores ``epoch_id``, so a replayed
+    epoch appends again: delivery is at-least-once, not effectively-once
+    (see streaming.pipeline and ROADMAP item 3).
     """
 
     def __init__(

@@ -46,10 +46,6 @@ def _tuned(fn):
 
     wrapped.__name__ = getattr(fn, "__name__", "query")
     wrapped.__doc__ = fn.__doc__
-    # expose the underlying query function: the plan-hash ledger
-    # (scripts/plan_window.py) fingerprints its source to detect plan
-    # rewrites that invalidate a driver attestation (VERDICT r11 #5)
-    wrapped.__wrapped__ = fn
     return wrapped
 
 

@@ -19,13 +19,16 @@ Reference behavior reproduced (SURVEY.md §2.1 S1-S4, L3):
   (client.go:102-105).  The reference's ``InsecureSkipVerify: true``
   quirk (client.go:65) is NOT carried forward.
 
-Offset semantics, honestly: MQTT has no replayable log.  The source is
-at-least-once from the broker (QoS 1); offsets here number messages as
-received, ``readBetweenOffsets`` CANNOT re-serve arbitrary historical
-ranges after a restart.  Effectively-once is restored downstream by
-``dedup_effectively_once`` (dropDuplicatesWithinWatermark on seq) +
-idempotent sink appends — the same story any MQTT→exactly-once pipeline
-must tell.
+Offset semantics: MQTT has no replayable log.  The live source is
+at-least-once from the broker (QoS 1) while the process lives; offsets
+number messages as received, and ``readBetweenOffsets`` re-serves only
+the in-memory window of uncommitted rows.  Across a restart it is
+weaker, and nothing downstream makes it effectively-once today:
+``LiveMqttStreamReader`` restarts ``seq`` at 0 in every process and its
+``read`` ignores ``start``; the daemon (``__main__``) never applies
+``dedup_effectively_once``; and ``DemuxSink.foreach_batch`` ignores
+``epoch_id``, so a replayed epoch appends again.  ROADMAP item 3 holds
+the fix.
 
 Test mode: ``.option("mode", "fake")`` generates a deterministic message
 stream (no broker, no paho needed) so the full DataSource machinery —
@@ -125,7 +128,8 @@ class MqttDataSource(DataSource):
     """``spark.readStream.format("mqtt")`` source.
 
     Options:
-      mode:      "live" (default; needs paho-mqtt) or "fake"
+      mode:      "live" (default; paho-mqtt when installed, otherwise
+                 the built-in ``streaming.mqtt_wire`` client) or "fake"
       broker:    host (live)
       port:      int, ssl scheme iff 8883 (live)
       topics:    JSON map name→topic-filter (the Consul KV value shape,
@@ -178,7 +182,7 @@ class MqttDataSource(DataSource):
 
 class FakeMqttStreamReader(SimpleDataSourceStreamReader):
     """Deterministic generator: seq n → topic cycles over 3 sensors of 2
-    devices, payload value = n/10 (every 7th a string state reading) —
+    devices, payload value = n/10 (every 3rd a string state reading) —
     enough variety to drive parse + demux end-to-end."""
 
     def __init__(self, options) -> None:

@@ -3,11 +3,14 @@ route → write, /root/reference/main.go:15-36) as a streaming query, plus
 the event-time operators the reference lacks entirely (SURVEY.md §2.2:
 watermarks, tumbling/sliding/session windows, stateful dedup).
 
-Delivery semantics upgrade (SURVEY.md §2.1 "Delivery semantics"): the
+Delivery semantics (SURVEY.md §2.1 "Delivery semantics"): the
 reference is at-most-once across restarts (volatile channel + Memory
-tables).  Here: checkpointed source offsets + foreachBatch idempotent-
-append + ``dropDuplicatesWithinWatermark`` on the message id give
-effectively-once.
+tables).  Here the live MQTT path is at-least-once from the broker while
+the process lives, with three gaps: the live reader restarts ``seq`` at
+0 in every process and ignores the checkpointed start offset, the daemon
+never applies ``dedup_effectively_once``, and ``DemuxSink.foreach_batch``
+ignores ``epoch_id``, so a replayed epoch appends again.  ROADMAP item 3
+holds the fix.
 """
 
 from __future__ import annotations
@@ -42,8 +45,8 @@ def run_ingest_stream(
 
     ``sink`` is a DemuxSink; its ``foreach_batch`` parses and routes each
     micro-batch (create-on-first-write + positional schema checks +
-    dead-letter).  Checkpointing makes the source effectively-once up to
-    sink idempotence.
+    dead-letter).  The checkpoint records offsets, but the sink is not
+    epoch-idempotent (see the module docstring).
 
     Each batch runs in the per-query session Spark clones at ``start()``,
     and this stream lowers that session's AQE ``minPartitionSize`` to one
@@ -78,7 +81,9 @@ def dedup_effectively_once(
 ) -> DataFrame:
     """At-least-once → effectively-once: drop duplicate message ids
     within the watermark horizon (bounded state, unlike a global
-    dropDuplicates)."""
+    dropDuplicates).  It keys on ``seq``, which the live reader restarts
+    at 0 in every process, so the daemon does not apply it (ROADMAP
+    item 3)."""
     return messages.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
         ["seq"]
     )

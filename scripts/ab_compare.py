@@ -7,8 +7,7 @@ Usage: PYTHONPATH=. python scripts/ab_compare.py OLD_TREE q1 [q2 ...]
            [--passes 3] [--skip-equality]
 
 OLD_TREE is a checkout of the baseline (e.g. a `git worktree` at the
-pre-change commit).  Pure observer: never touches the bench harness or
-the attestation ledger.
+pre-change commit).  Pure observer: never touches the bench harness.
 """
 
 from __future__ import annotations

@@ -15,7 +15,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def render() -> str:
-    from mqtt2clickhouse_spark import queries as qpkg
     from mqtt2clickhouse_spark.queries import QUERIES
 
     lines = [
@@ -24,18 +23,16 @@ def render() -> str:
         "Generated by `scripts/gen_query_catalog.py` — do not edit by hand.",
         "",
         f"{len(QUERIES)} declared queries, "
-        f"{sum(1 for s in QUERIES.values() if s.oracle)} with DuckDB oracles; "
-        "the first 50 rows are the current driver CORRECTNESS window "
-        "(`queries/__init__.py:_WINDOW`).",
+        f"{sum(1 for s in QUERIES.values() if s.oracle)} with DuckDB oracles, "
+        "in registration order.",
         "",
         "| # | Query | Oracle | Description |",
         "|---|---|---|---|",
     ]
     for i, (name, spec) in enumerate(QUERIES.items(), start=1):
-        win = " (window)" if i <= len(qpkg._WINDOW) else ""
         oracle = "full" if spec.oracle else "rows-only"
         desc = " ".join((spec.description or "").split())
-        lines.append(f"| {i}{win} | `{name}` | {oracle} | {desc} |")
+        lines.append(f"| {i} | `{name}` | {oracle} | {desc} |")
     return "\n".join(lines) + "\n"
 
 

@@ -1854,6 +1854,45 @@ def test_live_mqtt_reader_end_to_end_over_real_tcp(monkeypatch):
         broker.close()
 
 
+@pytest.mark.xfail(strict=True, reason="ROADMAP item 3: seq restarts at 0")
+def test_live_reader_seq_resumes_from_checkpointed_start(monkeypatch):
+    """A restarted stream hands a fresh reader the checkpointed offset as
+    ``start``.  The rows it reads must number on from there; a seq that
+    starts again at 0 re-uses offsets the checkpoint already committed."""
+    import sys
+    import time as _time
+
+    from mqtt_test_broker import MiniBroker
+
+    for mod in ("paho", "paho.mqtt", "paho.mqtt.client"):
+        monkeypatch.delitem(sys.modules, mod, raising=False)
+    from mqtt2clickhouse_spark.streaming.mqtt_source import LiveMqttStreamReader
+
+    broker = MiniBroker()
+    reader = None
+    try:
+        reader = LiveMqttStreamReader(
+            {"broker": "127.0.0.1", "port": str(broker.port), "topics": "/client0/#"}
+        )
+        deadline = _time.monotonic() + 5
+        while _time.monotonic() < deadline and (
+            not broker.sessions or not broker.sessions[0].subscriptions
+        ):
+            _time.sleep(0.05)
+        broker.publish("/client0/dev0/out/sensors/temp_out", b'{"value": 1}', qos=1)
+        rows = []
+        deadline = _time.monotonic() + 10
+        while not rows and _time.monotonic() < deadline:
+            batch, _ = reader.read({"seq": 1000})
+            rows = list(batch)
+        assert len(rows) == 1
+        assert rows[0][2] >= 1000
+    finally:
+        if reader is not None:
+            reader.client.disconnect()
+        broker.close()
+
+
 def test_live_mqtt_reader_reconnects_after_loop_death(monkeypatch):
     """A severed broker connection kills the wire client's network loop;
     the next read() must notice the surfaced ``loop_error``, reconnect,
