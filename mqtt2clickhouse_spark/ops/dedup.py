@@ -116,40 +116,9 @@ def shingle_rows(
     ).select("id", "e.n_sh", "e.shingle")
 
 
-#: bump to invalidate on-disk shingle/signature materializations when
-#: the shingling or hash construction changes
-_SHINGLE_STORE_VERSION = "v1"
-
-
-def _doc_store_prefix(sf_dir: str, params: str) -> str:
-    """Stable per-(sf, params) part of a documents-store key — the
-    prune scope: tags under this prefix with a different version/
-    fingerprint suffix are dead generations; a sibling params config
-    (different shingle n or signature k) is NOT matched."""
-    import re
-
-    return re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/")) + f"_{params}_"
-
-
-def _doc_store_path(sf_dir: str, kind: str, params: str) -> str:
-    """Store key: sf path + params + construction version + documents
-    fixture FINGERPRINT (ns-mtime + size + footer digest via
-    ops.store.fixture_fingerprint; write-once survives across sessions,
-    so a regenerated fixture must miss even on a same-second rewrite —
-    the edge-view policy)."""
-    import os
-    import tempfile
-
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    fp = fixture_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    tag = _doc_store_prefix(sf_dir, params) + f"{_SHINGLE_STORE_VERSION}_f{fp}"
-    return os.path.join(tempfile.gettempdir(), f"sparkgraft_{kind}", tag)
-
-
 def shingle_store(docs: DataFrame, sf_dir: str, n: int = 3) -> DataFrame:
     """``shingle_rows`` of the FULL documents table, materialized
-    write-once under /tmp — the shingle table a production dedup
+    once per Spark session — the shingle table a production dedup
     pipeline persists next to the corpus (it feeds every exact-verify
     path: jaccard, containment, threshold sweeps, decontamination,
     prefix-filter set joins).  A dozen registered queries were each
@@ -163,12 +132,12 @@ def shingle_store(docs: DataFrame, sf_dir: str, n: int = 3) -> DataFrame:
     is what the key describes); same schema as ``shingle_rows``:
     (id, n_sh, shingle).  Equality with a direct call is pinned by
     tests/test_edge_cache.py."""
-    from mqtt2clickhouse_spark.ops.store import materialize_once
+    from mqtt2clickhouse_spark.ops.store import materialized
 
-    return materialize_once(
-        shingle_rows(fan_out(docs), "doc_id", "text", n),
-        _doc_store_path(sf_dir, "shingles", f"n{n}"),
-        prune_prefix=_doc_store_prefix(sf_dir, f"n{n}"),
+    return materialized(
+        docs.sparkSession,
+        f"shingles:{sf_dir}:n{n}",
+        lambda: shingle_rows(fan_out(docs), "doc_id", "text", n),
     )
 
 
@@ -176,25 +145,26 @@ def minhash_signature_store(
     docs: DataFrame, sf_dir: str, k: int = 8, shingle_n: int = 3
 ) -> DataFrame:
     """``minhash_signature`` of the FULL documents table, materialized
-    write-once under /tmp — the per-document signature store an LSH
+    once per Spark session — the per-document signature store an LSH
     dedup deployment keeps as index state (signatures are computed at
     ingest, banded at query time).  Built FROM the shingle store, so
     the shingling cost is paid once for both materializations.
-    Contract and policy identical to ``shingle_store``."""
-    from mqtt2clickhouse_spark.ops.store import materialize_once
+    Contract identical to ``shingle_store``."""
+    from mqtt2clickhouse_spark.ops.store import materialized
 
-    shingled = shingle_store(docs, sf_dir, n=shingle_n).select(
-        F.col("id").alias("doc_id"), "shingle"
-    )
-    h = hash32(F.col("shingle"))
-    aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"m{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(k))
-    ]
-    return materialize_once(
-        shingled.groupBy("doc_id").agg(*aggs),
-        _doc_store_path(sf_dir, "minhash", f"k{k}_n{shingle_n}"),
-        prune_prefix=_doc_store_prefix(sf_dir, f"k{k}_n{shingle_n}"),
+    def build() -> DataFrame:
+        shingled = shingle_store(docs, sf_dir, n=shingle_n).select(
+            F.col("id").alias("doc_id"), "shingle"
+        )
+        h = hash32(F.col("shingle"))
+        aggs = [
+            F.min((F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"m{i}")
+            for i, (a, b) in enumerate(minhash_coeffs(k))
+        ]
+        return shingled.groupBy("doc_id").agg(*aggs)
+
+    return materialized(
+        docs.sparkSession, f"minhash:{sf_dir}:k{k}_n{shingle_n}", build
     )
 
 

@@ -575,11 +575,6 @@ def kmeans_pivots(
     )
 
 
-#: bump to invalidate on-disk trained-pivot materializations when the
-#: Lloyd construction changes
-_PIVOT_CACHE_VERSION = "v1"
-
-
 def kmeans_pivots_cached(
     corpus: DataFrame,
     sf_dir: str,
@@ -588,7 +583,7 @@ def kmeans_pivots_cached(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``kmeans_pivots`` materialized write-once under /tmp — the
+    """``kmeans_pivots`` materialized once per Spark session — the
     train-once / probe-many shape of a production ANN deployment: the
     coarse quantizer is INDEX STATE, built when the corpus lands, not
     re-trained by every query that probes it.  Registered consumers
@@ -597,44 +592,23 @@ def kmeans_pivots_cached(
     (explicitly — the iters DEFAULT here follows ``kmeans_pivots``);
     each was paying the full Lloyd pass stack per call.
 
-    Cache contract (the materialized edge-view policy from
-    graph_queries): keyed by (sf path, id/vec column names, k, iters,
-    construction version, embeddings fixture FINGERPRINT — ns-mtime +
-    size + footer digest, so a same-second regeneration misses);
-    write-if-missing on the _SUCCESS marker, and a successful build
-    prunes dead generations of the same (sf, columns, k, iters) config.
+    Keyed by (sf path, id/vec column names, k, iters); training runs
+    only when the session has no such table yet.
     The caller's ``corpus`` MUST be the embeddings table of ``sf_dir``
     — that is what the key describes (all call sites pass ``t(spark,
     sf_dir, "embeddings")``).  Training is deterministic (fixed init,
     fixed rounds, float64 numpy), so the cached matrix equals a direct
     ``kmeans_pivots`` call bit-for-bit — pinned by
     tests/test_edge_cache.py."""
-    import os
-    import re
-    import tempfile
+    from mqtt2clickhouse_spark.ops.store import materialized
 
-    from mqtt2clickhouse_spark.ops.store import (
-        fixture_fingerprint,
-        materialize_once,
-    )
-
-    san = lambda s: re.sub(r"[^A-Za-z0-9]", "_", s)  # noqa: E731
-    prefix = (
-        san(sf_dir.strip("/"))
-        + f"_{san(id_col)}_{san(vec_col)}_k{k}_i{iters}_"
-    )
-    fp = fixture_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = prefix + f"{_PIVOT_CACHE_VERSION}_f{fp}"
-    path = os.path.join(tempfile.gettempdir(), "sparkgraft_pivots", tag)
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        # training is expensive — only run it when the store is absent
-        # (materialize_once re-checks before publishing, racers safe)
-        trained = kmeans_pivots(
+    return materialized(
+        corpus.sparkSession,
+        f"pivots:{sf_dir}:{id_col}_{vec_col}_k{k}_i{iters}",
+        lambda: kmeans_pivots(
             corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-        ).coalesce(1)
-        return materialize_once(trained, path, prune_prefix=prefix)
-    return corpus.sparkSession.read.parquet(path)
+        ).coalesce(1),
+    )
 
 
 def quantize_int8(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:

@@ -1,318 +1,36 @@
-"""Write-once materialization of derived state under /tmp.
+"""Session-scoped materialization of derived tables.
 
-One publish primitive for every store in the repo (graph edge view,
-trained k-means quantizer, documents shingle table, MinHash signature
-store): build into a private temp directory, then publish with an
-ATOMIC ``os.rename`` — so a reader can never observe a half-written
-store, and two concurrent builders race safely (exactly one rename
-wins; the loser discards its build).  The plain
-check-marker-then-overwrite pattern has a window where writer B's
-``mode("overwrite")`` deletes writer A's in-flight output; with the
-driver's smoke/correctness/bench stages all touching the same /tmp
-keys, that window is worth closing.
+A derived table (trade edges, LPA labels, co-purchase edges, k-means
+pivots, shingles, MinHash signatures) is built once per SparkContext
+and read back as parquet by every consumer in that session.  It lives
+under the context's SparkFiles root, which Spark creates per context
+and deletes on ``stop()`` and at process exit, so nothing outlives the
+session.
 
-A leftover directory WITHOUT Spark's ``_SUCCESS`` marker (a build that
-crashed before publish could never exist here — publish is a rename of
-a complete build — but an older store layout or a torn filesystem
-might leave one) is treated as garbage.  Its replacement is serialized
-through an ``O_EXCL`` lock file so a concurrent builder's *published*
-store can never be swept away mid-read (the r8 TOCTOU: check-then-
-rmtree raced a concurrent publish).
-
-Cache keys: every store path embeds :func:`fixture_fingerprint` of its
-input fixture files — nanosecond mtime, byte size, AND a digest of the
-parquet footer tail — so a fixture regenerated within the same second
-(or copied with ``cp -p`` over different content) MISSES instead of
-serving a stale store (for directory fixtures the tail digest is
-sample-bounded; see :func:`fixture_fingerprint` for the residual).  Key construction puts the fingerprint (and the
-construction-version tag) LAST, after a stable per-(sf, params) prefix,
-so :func:`materialize_once`'s ``prune_prefix`` can sweep dead
-generations (old fingerprints, old versions) without touching live
-sibling configurations.
-
-FEATURE-FROZEN as of r12 (VERDICT r11 #4): three consecutive rounds of
-post-hoc review findings on this surface say its complexity budget is
-spent.  No new capabilities; bug fixes only, each with a failing test
-committed first.  Known accepted residual: a ``cp -p``-style same-size,
-same-mtime content swap on a NON-sampled entry of a directory with more
-than ``_SAMPLE_TAILS`` files is missed (see
-:func:`fixture_fingerprint`); every entry's ns-mtime + size always
-contribute, so any real rewrite is caught.
+Contract: a derived table lives as long as its SparkContext, and its
+input tables must not be rewritten under it in that time.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
-import shutil
-import time
-import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame
-
-#: bytes of file tail hashed into the fingerprint — parquet puts its
-#: footer (row-group stats, schema) last, so this is content-derived
-_TAIL_BYTES = 4096
-
-#: tail reads paid per DIRECTORY level (a name-deterministic sample);
-#: every entry still contributes its full stat line, so a one-part
-#: rewrite always changes the key — the sample only bounds the
-#: open+read storm a 10^4-part partitioned table would otherwise pay
-#: PER store-key lookup (VERDICT r10 scale nit)
-_SAMPLE_TAILS = 16
-
-#: recursion bound for pathological nesting (a fixture is at most a
-#: partitioned dataset: key=value dirs over part files — depth 2-3)
-_MAX_DEPTH = 16
+from pyspark import SparkFiles
+from pyspark.sql import DataFrame, SparkSession
 
 
-def _tail_digest(path: str, size: int) -> str:
-    with open(path, "rb") as f:
-        f.seek(max(0, size - _TAIL_BYTES))
-        return hashlib.md5(f.read(_TAIL_BYTES)).hexdigest()
-
-
-def _entry_part(path: str, label: str, depth: int = 0) -> str:
-    """One entry's contribution.  File: ns-mtime, byte size, md5 of the
-    tail (the parquet footer — different data means different row-group
-    statistics even at equal size).  Directory: every child contributes
-    its stat line (ns-mtime + size — so any one-part rewrite changes
-    the key), but only a bounded, name-deterministic sample pays the
-    open+tail read; subdirectories (a partitionBy-written dataset nests
-    part files under key=value levels) recurse up to ``_MAX_DEPTH``.
-    Symlinked entries are recorded by their target and never FOLLOWED —
-    a symlinked cycle walked 40 ELOOP levels before collapsing to
-    'absent' (ADVICE r10), and a deep enough chain of real dirs would
-    RecursionError past the OSError handler.  The OSError fallback is
-    PER ENTRY — a vanished or unreadable entry marks itself 'absent'
-    without collapsing the whole fixture to a constant (which made
-    different corpora at same-basename paths fingerprint identically —
-    the r10 probe-collision bug, and its nested-shape recurrence)."""
-    try:
-        if depth and os.path.islink(path):
-            return f"{label}:link:{os.readlink(path)}"
-        if depth > _MAX_DEPTH:
-            return f"{label}:deep"
-        if os.path.isdir(path):
-            names = sorted(
-                n for n in os.listdir(path) if not n.startswith((".", "_"))
-            )
-            # classify first: subdirectories recurse and must not
-            # consume tail-read slots (r11 review — a partitioned root
-            # whose key=value names hash low starved its FILES of
-            # digests), so the sample is drawn from file entries only
-            kids = [
-                (
-                    n,
-                    child,
-                    os.path.islink(child) or os.path.isdir(child),
-                )
-                for n in names
-                for child in (os.path.join(path, n),)
-            ]
-            sampled = set(
-                sorted(
-                    (n for n, _, is_sub in kids if not is_sub),
-                    key=lambda n: hashlib.md5(n.encode()).hexdigest(),
-                )[:_SAMPLE_TAILS]
-            )
-            parts = []
-            for n, child, is_sub in kids:
-                try:
-                    if is_sub:
-                        parts.append(_entry_part(child, n, depth + 1))
-                        continue
-                    st = os.stat(child)
-                    tail = (
-                        _tail_digest(child, st.st_size)
-                        if n in sampled
-                        else "-"
-                    )
-                    parts.append(f"{n}:{st.st_mtime_ns}:{st.st_size}:{tail}")
-                except OSError:
-                    parts.append(f"{n}:absent")
-            return f"{label}:dir:{len(names)}:" + ";".join(parts)
-        st = os.stat(path)
-        return (
-            f"{label}:{st.st_mtime_ns}:{st.st_size}:"
-            f"{_tail_digest(path, st.st_size)}"
-        )
-    except OSError:
-        return f"{label}:absent"
-
-
-def fixture_fingerprint(*paths: str) -> str:
-    """Content-identity fingerprint of fixture files for store keys.
-
-    Combines, per file: nanosecond mtime, byte size, and an md5 of the
-    tail ``_TAIL_BYTES`` bytes.  Any of the three changing changes the
-    12-hex digest, so a same-second rewrite or a ``cp -p`` with
-    preserved timestamps still misses the cache — unconditionally for
-    single-FILE fixtures.  Directory fixtures (Spark-written parquet
-    datasets, possibly partitioned) aggregate recursively with the
-    tail digest paid on a ``_SAMPLE_TAILS``-bounded per-directory
-    sample of FILE entries (see :func:`_entry_part`), so for a
-    directory with more files than the sample a ``cp -p`` content swap
-    on an UNSAMPLED part is the documented residual miss (r11 scale
-    bound; every entry's ns-mtime + size still always contribute, so
-    any normal rewrite changes the key).  Missing paths contribute a
-    constant marker (the store then keys on "absent", matching the old
-    mt=0 behavior)."""
-    parts = [_entry_part(p, os.path.basename(p)) for p in sorted(paths)]
-    return hashlib.md5(";".join(parts).encode()).hexdigest()[:12]
-
-
-def _complete(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _replace_garbage(path: str, tmp: str) -> None:
-    """Replace a non-complete destination with ``tmp``, serialized by an
-    ``O_EXCL`` lock so two builders can never interleave check/remove/
-    publish (the TOCTOU where one sweeps the other's fresh publish).
-    The loser of the lock just waits for the winner's publish below."""
-    lock = f"{path}.lock"
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        return  # another builder owns the replacement; outcome checked later
-    try:
-        os.close(fd)
-        if _complete(path):  # published while we waited for the lock
-            return
-        # move the garbage ASIDE atomically, then delete the copy — a
-        # reader can never observe a half-deleted destination
-        if os.path.exists(path):
-            aside = f"{path}.garbage.{uuid.uuid4().hex}"
-            os.rename(path, aside)
-            shutil.rmtree(aside, ignore_errors=True)
-        os.rename(tmp, path)
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
-
-
-#: Shape of a store-key GENERATION suffix (what follows the stable
-#: per-(sf, params) prefix): construction version + fixture
-#: fingerprint, or the legacy pre-r9 mtime scheme.  Pruning requires a
-#: FULL match of the remainder — deleting on prefix alone swept the
-#: LIVE store of a different sf_dir whose sanitized path extends this
-#: one (/data/sf0.1 vs /data/sf0.1_copy), failing a concurrent reader
-#: mid-query (ADVICE r9; layout_queries shares this constant).
-_GEN_RE = re.compile(r"v\d+_(f[0-9a-f]{12}|m\d+)")
-
-#: Build-state debris of a generation: the ``.build.<uuid>`` temp dir a
-#: crashed builder left, its ``.lock`` replacement serialization file,
-#: or a ``.garbage.<uuid>`` aside a crashed sweep abandoned.  Group 1
-#: is the generation tag it belongs to — debris of the LIVE generation
-#: is spared (a concurrent builder of the same key may own it); debris
-#: of a DEAD generation is reclaimed by the sweep (ADVICE r10: the
-#: ``_GEN_RE`` fullmatch restraint re-introduced the stranded-/tmp leak
-#: for this class)
-_DEBRIS_RE = re.compile(
-    r"(v\d+_(?:f[0-9a-f]{12}|m\d+))\."
-    r"(?:build\.[0-9a-f]+|lock|garbage\.[0-9a-f]+)"
-)
-
-#: Cross-session grace window for dead-generation sweeps (shared by
-#: every store family AND the layout consumer): a concurrent session
-#: mid-query over the PREVIOUS generation (its fixture was regenerated
-#: under it) must not lose the store to the rebuilding session's
-#: immediate sweep.  A dead generation younger than this many seconds
-#: (by directory mtime — when its build landed) is left for a later
-#: sweep; the leak pruning exists for is cross-round debris, hours old
-#: by the time the next sweep sees it.  Best-effort, not a lease:
-#: sessions outliving the window over a regenerated fixture remain
-#: unsupported.
-_PRUNE_GRACE_SECONDS = 1800.0
-
-
-def _prune_siblings(path: str, prefix: str) -> None:
-    """Remove DEAD generations of a just-published store: sibling
-    directories whose name is ``prefix`` (the stable per-(sf, params)
-    part of the key) + a generation-shaped suffix (``_GEN_RE``) and is
-    not the live ``path``.  Keys place version + fixture fingerprint
-    after the prefix, so everything matched is an old generation —
-    without this, every version bump or fixture regeneration strands a
-    full store under /tmp forever.  Two restraints: names whose
-    remainder is NOT generation-shaped (a different sf_dir's tag that
-    happens to extend the prefix) are never touched — callers must pass
-    a prefix that reaches the params segment so remainder ==
-    version+fingerprint — and generations inside the cross-session
-    grace window (``_PRUNE_GRACE_SECONDS``) survive until a later
-    sweep."""
-    parent = os.path.dirname(path)
-    live = os.path.basename(path)
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    cutoff = time.time() - _PRUNE_GRACE_SECONDS
-    for name in names:
-        if not name.startswith(prefix) or name == live:
-            continue
-        rest = name[len(prefix):]
-        if not _GEN_RE.fullmatch(rest):
-            # also reclaim orphaned build state (.build.<uuid> / .lock /
-            # .garbage.<uuid>) of DEAD generations — sparing the live
-            # tag's in-flight state, which a concurrent builder may own
-            m = _DEBRIS_RE.fullmatch(rest)
-            if not m or prefix + m.group(1) == live:
-                continue  # not this store's, or live-tag state: spare
-        target = os.path.join(parent, name)
-        try:
-            if os.stat(target).st_mtime > cutoff:
-                continue  # inside the grace window: maybe still in use
-        except OSError:
-            continue  # vanished under us (a concurrent sweep): done
-        if os.path.isdir(target):
-            shutil.rmtree(target, ignore_errors=True)
-        else:
-            try:
-                os.remove(target)  # .lock files are plain files
-            except OSError:
-                pass
-
-
-def materialize_once(
-    df: DataFrame, path: str, prune_prefix: str | None = None
+def materialized(
+    spark: SparkSession, key: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    """Ensure ``path`` holds the parquet materialization of ``df`` and
-    return a DataFrame reading it.  Builds at most once per path per
-    machine; concurrent callers are safe.  When ``prune_prefix`` is
-    given, a successful build also sweeps dead sibling generations
-    (see :func:`_prune_siblings`)."""
-    spark = df.sparkSession
-    if not _complete(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.build.{uuid.uuid4().hex}"
-        try:
-            df.write.mode("overwrite").parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                if not _complete(path):
-                    _replace_garbage(path, tmp)
-                # else: a concurrent builder published first; ours is
-                # discarded by the finally below
-        finally:
-            # covers: lost races, a failed df.write, a failed publish —
-            # no failure mode may strand a .build dir under /tmp
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
-        # re-verify before reading: if a concurrent garbage-replacement
-        # holds the lock, give its publish a moment to land
-        deadline = time.monotonic() + 30.0
-        while not _complete(path) and time.monotonic() < deadline:
-            time.sleep(0.1)
-        if not _complete(path):
-            raise RuntimeError(
-                f"store publish failed: {path} has no _SUCCESS marker "
-                f"(a concurrent builder may have died holding {path}.lock)"
-            )
-        if prune_prefix:
-            _prune_siblings(path, prune_prefix)
+    """Read the derived table ``key`` (kind, sf_dir and params; every
+    non-alphanumeric character becomes ``_``), writing ``build()``
+    first if this session has not.  A crashed partial write has no
+    ``_SUCCESS`` marker (Spark writes it last), so the next call
+    rebuilds it."""
+    name = re.sub(r"[^A-Za-z0-9]", "_", key)
+    path = os.path.join(SparkFiles.getRootDirectory(), "derived", name)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        build().write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

@@ -14,8 +14,6 @@ state, no convergence nondeterminism.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -36,72 +34,39 @@ def _fold_zero(col: F.Column) -> F.Column:
     return F.when(col == 0, F.lit(0.0)).otherwise(col)
 
 
-#: bump to invalidate on-disk edge materializations when the pair
-#: construction changes (v2: weighted — carries the lineitem
-#: multiplicity per pair so weighted LPA shares the same cache)
-_EDGE_CACHE_VERSION = "v2"
-
-
-def _edge_cache_prefix(sf_dir: str) -> str:
-    """Stable per-sf part of the edge-store key — the prune scope:
-    every tag under this prefix with a different version/fingerprint
-    suffix is a dead generation."""
-    import re as _re
-
-    return _re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/")) + "_"
-
-
-def _edge_cache_path(sf_dir: str) -> str:
-    """Materialized-edge-view key: sf path + construction version +
-    fixture FINGERPRINT (nanosecond mtime + size + footer digest via
-    ops.store.fixture_fingerprint — a regenerated fixture must miss
-    even when rewritten within the same second or with ``cp -p``;
-    the write-once check survives across sessions)."""
-    import tempfile as _tempfile
-
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    fp = fixture_fingerprint(
-        os.path.join(sf_dir, "lineitem.parquet"),
-        os.path.join(sf_dir, "orders.parquet"),
-    )
-    tag = _edge_cache_prefix(sf_dir) + f"{_EDGE_CACHE_VERSION}_f{fp}"
-    return os.path.join(_tempfile.gettempdir(), "sparkgraft_edges", tag)
-
-
 def _weighted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(supplier, customer, weight) trade pairs — each UNDIRECTED edge
     of the shared graph exactly once, prefixed node ids, with the
     lineitem multiplicity as the edge weight.
 
-    Materialized ONCE per (scale factor, fixture mtime) under /tmp and
-    read back as parquet — the graph family's shared edge table.  Nine
-    registered queries (pagerank, directed pagerank, LPA, weighted
+    Materialized once per Spark session (``ops.store.materialized``)
+    and read back as parquet — the graph family's shared edge table.
+    Nine registered queries (pagerank, directed pagerank, LPA, weighted
     community seeding, modularity, assortativity, triangles, k-core,
     random walks, link prediction, HITS, BFS) all start from this
     subtree; recomputing the lineitem⋈orders join per query cost ~1s ×
     N at sf0.1, and at warehouse scale this is exactly a materialized
     edge VIEW — you build the graph once, not once per algorithm.  The
     groupBy replaces the old distinct (same pair set, one extra bigint
-    column), so unweighted consumers just project the weight away.
-    Write-if-missing keyed on the _SUCCESS marker (Spark writes it
-    last, so a crashed partial write retries)."""
-    from mqtt2clickhouse_spark.ops.store import materialize_once
+    column), so unweighted consumers just project the weight away."""
+    from mqtt2clickhouse_spark.ops.store import materialized
 
-    li = fan_out(t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey"))
-    orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
+    def build() -> DataFrame:
+        li = fan_out(
+            t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         )
-        .groupBy("s", "c")
-        .agg(F.count(F.lit(1)).cast("long").alias("wt"))
-    )
-    return materialize_once(
-        pairs, _edge_cache_path(sf_dir), prune_prefix=_edge_cache_prefix(sf_dir)
-    )
+        orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+        return (
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .select(
+                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("s"),
+                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("c"),
+            )
+            .groupBy("s", "c")
+            .agg(F.count(F.lit(1)).cast("long").alias("wt"))
+        )
+
+    return materialized(spark, f"edges:{sf_dir}", build)
 
 
 def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -292,7 +257,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     node sees — never over the corpus).  Synchronous min-tie-break
     updates make the fixpoint deterministic, which is what lets DuckDB
     replay it as chained CTEs.  The fixpoint itself is read from the
-    materialized label store (built once per edge-store generation)."""
+    materialized label store (built once per Spark session)."""
     labels = _lpa_labels_stored(spark, sf_dir)
     return (
         labels.groupBy("label")
@@ -302,34 +267,8 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_prune_prefix(sf_dir: str) -> str:
-    """Stable per-(sf, rounds) part of the LPA-labels key — the prune
-    scope.  Must reach the params segment so the remainder under it is
-    exactly version+fingerprint (ops.store._GEN_RE): an sf-only prefix
-    both left LPA generations unprunable (remainder ``lpaN_v…`` is not
-    generation-shaped) and, pre-shape-check, could sweep a sibling
-    sf_dir's live store (ADVICE r9)."""
-    return _edge_cache_prefix(sf_dir) + f"lpa{_LPA_ROUNDS}_"
-
-
-def _lpa_store_path(sf_dir: str) -> str:
-    """Materialized LPA-labels key: same fixture fingerprint as the
-    edge store it derives from, plus the round count and edge-
-    construction version (labels are a pure function of the three)."""
-    import tempfile as _tempfile
-
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    fp = fixture_fingerprint(
-        os.path.join(sf_dir, "lineitem.parquet"),
-        os.path.join(sf_dir, "orders.parquet"),
-    )
-    tag = _lpa_prune_prefix(sf_dir) + f"{_EDGE_CACHE_VERSION}_f{fp}"
-    return os.path.join(_tempfile.gettempdir(), "sparkgraft_lpa", tag)
-
-
 def _lpa_labels_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``_lpa_labels`` materialized write-once under /tmp — community
+    """``_lpa_labels`` materialized once per Spark session — community
     labels as DERIVED STATE, the same policy as the edge view they are
     computed from.  Both consumers (label_propagation's size report,
     graph_modularity's quality readout) were each paying the
@@ -339,14 +278,12 @@ def _lpa_labels_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixpoint is deterministic (synchronous rounds, integer counts,
     min-struct tie-breaks), so the stored table equals a direct
     ``_lpa_labels`` call — pinned by tests/test_edge_cache.py."""
-    from mqtt2clickhouse_spark.ops.store import materialize_once
+    from mqtt2clickhouse_spark.ops.store import materialized
 
-    path = _lpa_store_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    labels = _lpa_labels(_sym_trade_edges(spark, sf_dir)).coalesce(1)
-    return materialize_once(
-        labels, path, prune_prefix=_lpa_prune_prefix(sf_dir)
+    return materialized(
+        spark,
+        f"lpa:{sf_dir}:r{_LPA_ROUNDS}",
+        lambda: _lpa_labels(_sym_trade_edges(spark, sf_dir)).coalesce(1),
     )
 
 
@@ -558,31 +495,10 @@ _DUCK_COP_EDGES = f"""items AS (SELECT DISTINCT l_orderkey, l_partkey FROM linei
         GROUP BY 1, 2),
     edges AS (SELECT u, v FROM pe WHERE w >= {_TRI_MIN_W})"""
 
-def _cop_prune_prefix(sf_dir: str) -> str:
-    """Stable per-(sf, cap, min-weight) part of the co-purchase key —
-    the prune scope, params-inclusive for the same reason as
-    :func:`_lpa_prune_prefix` (ADVICE r9)."""
-    return _edge_cache_prefix(sf_dir) + f"cop{_TRI_CAP}w{_TRI_MIN_W}_"
-
-
-def _cop_store_path(sf_dir: str) -> str:
-    """Co-purchase edge-store key: sf + basket params in the stable
-    prefix, construction version + lineitem fingerprint last (the
-    prune-able generation suffix, same layout as the trade-edge and
-    LPA stores)."""
-    import tempfile as _tempfile
-
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    fp = fixture_fingerprint(os.path.join(sf_dir, "lineitem.parquet"))
-    tag = _cop_prune_prefix(sf_dir) + f"{_EDGE_CACHE_VERSION}_f{fp}"
-    return os.path.join(_tempfile.gettempdir(), "sparkgraft_cop", tag)
-
-
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-filtered co-purchase edge table (u < v part pairs in
     >= ``_TRI_MIN_W`` shared orders, baskets capped at ``_TRI_CAP``) —
-    SHARED DERIVED STATE, materialized write-once under /tmp like the
+    SHARED DERIVED STATE, materialized once per Spark session like the
     trade-edge view and the LPA labeling (same policy: three consumers
     — triangle_count, graph_kcore, link_prediction_ra — each paid the
     basket build per call; at warehouse scale the co-purchase graph is
@@ -595,20 +511,19 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     set semantics), so the stored table equals a direct build — pinned
     by tests/test_edge_cache.py."""
     from mqtt2clickhouse_spark.ops.graph import basket_pairs
-    from mqtt2clickhouse_spark.ops.store import materialize_once
+    from mqtt2clickhouse_spark.ops.store import materialized
 
-    path = _cop_store_path(sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    pairs = basket_pairs(li, "l_orderkey", "l_partkey", cap=_TRI_CAP)
-    edges = (
-        pairs.groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= _TRI_MIN_W)
-        .select("u", "v")
-    )
-    return materialize_once(edges, path, prune_prefix=_cop_prune_prefix(sf_dir))
+    def build() -> DataFrame:
+        li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+        pairs = basket_pairs(li, "l_orderkey", "l_partkey", cap=_TRI_CAP)
+        return (
+            pairs.groupBy("u", "v")
+            .agg(F.count(F.lit(1)).alias("w"))
+            .filter(F.col("w") >= _TRI_MIN_W)
+            .select("u", "v")
+        )
+
+    return materialized(spark, f"cop:{sf_dir}:c{_TRI_CAP}w{_TRI_MIN_W}", build)
 
 
 _DUCK_TRIANGLES = f"""

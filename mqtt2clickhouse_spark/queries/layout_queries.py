@@ -12,11 +12,13 @@ deployment lives on, demonstrated with plan-provable evidence.
   that turns "scan 100 TB" into "scan 3 TB" for time-ranged queries.
 
 Both queries materialize their layout ONCE per (session, scale factor)
-under /tmp — write-if-missing, so the measured steady-state cost is the
-read path (a long-lived warehouse pays the layout cost at ingest time,
-exactly like these queries' first call).  Values are layout-independent,
-so the DuckDB oracles run on the ORIGINAL parquet fixtures — the
-correctness check proves the layout changed the plan, not the answer.
+under the session's SparkFiles root, which Spark deletes when the
+session stops — write-if-missing, so the measured steady-state cost is
+the read path (a long-lived warehouse pays the layout cost at ingest
+time, exactly like these queries' first call).  Values are
+layout-independent, so the DuckDB oracles run on the ORIGINAL parquet
+fixtures — the correctness check proves the layout changed the plan,
+not the answer.
 
 Plan pins: tests/test_plans.py asserts the bucketed join plans zero
 exchanges before the SortMergeJoin and the pruned scan shows the day
@@ -27,131 +29,37 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mqtt2clickhouse_spark.queries.base import register, t
 from mqtt2clickhouse_spark.queries.dedup_queries import _DUCK_HASH32
 
-_LAYOUT_VERSION = "v1"
 _N_BUCKETS = 8
 _PRUNE_DAY = "2024-01-15"
 
 
-def _tag_prefix(sf_dir: str) -> str:
-    """Stable per-sf part of the layout key — the prune scope (same
-    layout as every other store key: prefix first, version +
-    fingerprint last)."""
-    return re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/")) + "_"
-
-
-def _tag(sf_dir: str) -> str:
-    """Layout-cache key: sf prefix + code version + fixture FINGERPRINT
-    (ns-mtime + size + parquet-footer digest, ops.store.
-    fixture_fingerprint — the same content-identity key every other
-    store uses, so a same-second rewrite or ``cp -p`` with different
-    content misses).  The fingerprint matters within a session (a
-    regenerated fixture re-tags, so consumers rebuild instead of
-    serving a stale layout) and also keys the catalog table NAMES, so
-    two sessions over different fixture generations can never collide
-    on a table name."""
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    fp = fixture_fingerprint(
-        *(os.path.join(sf_dir, f"{n}.parquet") for n in ("events", "lineitem", "orders"))
-    )
-    return _tag_prefix(sf_dir) + f"{_LAYOUT_VERSION}_f{fp}"
-
-
 def _layout_root(sf_dir: str) -> str:
-    """The live generation's root.  Every layout consumer resolves its
-    paths through here, so this is also where dead generations get
-    swept (once the live one holds a completed build) — pruning wired
-    into one consumer only would leave workloads that never run it
-    stranding old generations forever."""
-    tag = _tag(sf_dir)
-    _prune_dead_layouts(sf_dir, tag)
-    return os.path.join(tempfile.gettempdir(), "sparkgraft_layout", tag)
-
-
-#: generation-suffix shape and cross-session grace window — SHARED with
-#: every other store family (ops.store defines both; keeping one copy
-#: means a future generation-scheme change cannot desynchronize the
-#: pruners).  The layout sweep needs them for the same two reasons:
-#: never delete a different sf_dir's tag that happens to extend the
-#: prefix, and never delete a generation a concurrent session may still
-#: be reading (its catalog tables point at external /tmp paths under
-#: the old generation's root — ADVICE r9).
-from mqtt2clickhouse_spark.ops.store import (  # noqa: E402
-    _GEN_RE,
-    _PRUNE_GRACE_SECONDS,
-)
-
-
-def _prune_dead_layouts(sf_dir: str, live: str) -> None:
-    """Sweep dead generations (old fingerprints / versions) of this
-    sf's layout root — mirrors ops.store._prune_siblings; without it a
-    fixture regeneration strands the old bucketed tables under /tmp
-    forever.  Four guards:
-
-    - only after the LIVE generation holds at least one completed
-      build (`_SUCCESS` one level down) — a failed first build must
-      not cost the old working generation with nothing to replace it;
-    - only names whose post-prefix remainder IS a generation suffix
-      (``_GEN_RE``) — a different sf_dir whose sanitized path extends
-      this one (``/data/sf`` vs ``/data/sf_new``) shares the string
-      prefix but its tags carry extra path segments before the
-      version, so they never match;
-    - never the live tag itself (table names embed the tag, so no
-      session can hold catalog entries for a different generation
-      under the same name);
-    - only generations older than ``_PRUNE_GRACE_SECONDS`` (by dir
-      mtime) — a concurrent session over the previous fixture
-      generation keeps its working set for the grace window instead of
-      losing it to this session's first sweep (ADVICE r9)."""
-    import shutil
-    import time
-
-    parent = os.path.join(tempfile.gettempdir(), "sparkgraft_layout")
-    live_root = os.path.join(parent, live)
-    try:
-        built = any(
-            os.path.exists(os.path.join(live_root, d, "_SUCCESS"))
-            for d in os.listdir(live_root)
-        )
-    except OSError:
-        return  # live generation not started: keep the old one intact
-    if not built:
-        return
-    prefix = _tag_prefix(sf_dir)
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    cutoff = time.time() - _PRUNE_GRACE_SECONDS
-    for name in names:
-        if name == live or not name.startswith(prefix):
-            continue
-        if not _GEN_RE.fullmatch(name[len(prefix):]):
-            continue
-        target = os.path.join(parent, name)
-        try:
-            if os.stat(target).st_mtime > cutoff:
-                continue  # inside the grace window: maybe still in use
-        except OSError:
-            continue  # vanished under us (a concurrent sweep): done
-        shutil.rmtree(target, ignore_errors=True)
+    """This session's layout root for ``sf_dir``: under the SparkFiles
+    root, which Spark creates per SparkContext and deletes on
+    ``stop()``, so a layout lives as long as the session that wrote it
+    (the ``ops.store`` contract: its input fixtures must not be
+    rewritten under it in that time)."""
+    tag = re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/"))
+    return os.path.join(SparkFiles.getRootDirectory(), "layout", tag)
 
 
 def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Create the bucketed (and bucket-sorted) lineitem/orders tables for
     this scale factor if this session has not already — bucketBy requires
     the catalog (parquet files alone carry no bucket spec), so the tables
-    are session-registered with external /tmp paths."""
+    are session-registered with external paths under the layout root;
+    the names carry the sanitized ``sf_dir`` so two scale factors in one
+    session never collide."""
     root = _layout_root(sf_dir)
-    tag = os.path.basename(root)  # one fingerprint computation per call
+    tag = os.path.basename(root)
     li_t, od_t = f"li_bkt_{tag}", f"od_bkt_{tag}"
     if not spark.catalog.tableExists(li_t):
         (

@@ -486,8 +486,8 @@ def similarity_ann_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     # trained quantizer is shared index state (train-once/probe-many):
-    # materialized via the write-once /tmp cache, same policy as the
-    # graph edge view
+    # materialized once per Spark session, same policy as the graph
+    # edge view
     pivots = _sim.kmeans_pivots_cached(emb, sf_dir, k=16, iters=2)
     return _sim.ivf_topk(emb, queries, n_pivots=16, nprobe=4, k=5, pivots=pivots)
 

@@ -20,8 +20,10 @@ diameter growth.)
 Prints a markdown table (paste into NOTES.md): per query, the sf0.1
 and probe wall-times (min-of-2 after a warm build pass), their ratio,
 and the scaling exponent log(ratio)/log(R).  Store builds (edge view,
-shingle + MinHash signature stores) are timed separately — they are
-one-time ingest-side costs, not query costs.
+co-purchase edges, shingle + MinHash signature stores) are timed
+separately — they are one-time ingest-side costs, not query costs.
+Derived tables live for one Spark session, so every build timed here
+is cold.
 """
 
 from __future__ import annotations

@@ -310,22 +310,11 @@ def run_hub_leg(spark) -> None:
         _weighted_pairs,
     )
 
-    from mqtt2clickhouse_spark.queries.graph_queries import (
-        _cop_store_path,
-        _edge_cache_path,
-    )
-
     print("building hub fixture ...", file=sys.stderr)
     hub_dir = build_skew_hub(spark)
 
-    # drop BOTH fixtures' materialized stores so the build comparison
-    # is cold-vs-cold (the uniform store usually survives in /tmp from
-    # earlier probe runs — the first run of this leg read an 11x/88x
-    # "blowup" that was pure cache asymmetry)
-    for d in (PROBE_DIR, hub_dir):
-        for pathfn in (_edge_cache_path, _cop_store_path):
-            shutil.rmtree(pathfn(d), ignore_errors=True)
-
+    # derived tables live for one Spark session, so both fixtures'
+    # store builds below are cold
     builds: dict[str, tuple[float, float]] = {}
     for label, build in (
         ("edge_store", lambda d: _weighted_pairs(spark, d).count()),

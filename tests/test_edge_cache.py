@@ -1,25 +1,27 @@
-"""The graph family's materialized edge view (graph_queries._trade_pairs).
+"""The session-scoped derived tables (ops.store.materialized).
 
-Eight graph queries share the lineitem⋈orders distinct pair subtree;
-round 8 materializes it write-once under /tmp keyed by (sf path,
-construction version, fixture mtimes) — the warehouse materialized-VIEW
-pattern.  These tests pin the cache contract: correct contents, true
-write-once reuse, and mtime-keyed invalidation (a regenerated fixture
-must MISS, or the cache serves a stale graph while the DuckDB oracle
-reads the fresh originals)."""
+Six derived tables are built once per Spark session and read back as
+parquet by their consumers: the graph family's trade-edge view, the LPA
+labels, the co-purchase edges, the trained k-means pivots, the shingle
+table and the MinHash signatures.  These tests pin the contract: each
+stored table equals its direct computation, it is built once per
+session, its consumers scan it instead of recomputing it, and it does
+not outlive the process that built it."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import subprocess
+import sys
+from urllib.parse import urlparse
 
 import pytest
+from pyspark import SparkFiles
 from pyspark.sql import functions as F
 
-from mqtt2clickhouse_spark.queries.graph_queries import (
-    _edge_cache_path,
-    _trade_pairs,
-)
+from mqtt2clickhouse_spark.queries.graph_queries import _trade_pairs
 from mqtt2clickhouse_spark.queries.base import t
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -56,11 +58,30 @@ def test_cache_contents_match_direct_computation(spark, sf_copy):
 
 
 def test_cache_is_write_once(spark, sf_copy):
-    _trade_pairs(spark, sf_copy).count()
-    marker = os.path.join(_edge_cache_path(sf_copy), "_SUCCESS")
+    """Built once per session: the table lives under the session's
+    SparkFiles root, and a second call reads it without rewriting."""
+    files = _trade_pairs(spark, sf_copy).inputFiles()
+    path = os.path.dirname(urlparse(files[0]).path)
+    assert path.startswith(os.path.join(SparkFiles.getRootDirectory(), "derived"))
+    marker = os.path.join(path, "_SUCCESS")
     first_write = os.path.getmtime(marker)
     _trade_pairs(spark, sf_copy).count()
     assert os.path.getmtime(marker) == first_write, "cache was rewritten"
+
+
+def test_materialized_rebuilds_a_partial_write(spark):
+    """A write that crashed before Spark's _SUCCESS marker is rebuilt on
+    the next call; a complete one is read back without rebuilding."""
+    from mqtt2clickhouse_spark.ops.store import materialized
+
+    df = spark.range(10).selectExpr("id", "id * 2 AS v")
+    first = materialized(spark, "test:partial", lambda: df)
+    path = os.path.dirname(urlparse(first.inputFiles()[0]).path)
+    os.remove(os.path.join(path, "_SUCCESS"))  # what a crashed write leaves
+    rebuilt = materialized(spark, "test:partial", lambda: df.filter("id < 5"))
+    assert sorted(r.id for r in rebuilt.collect()) == list(range(5))
+    kept = materialized(spark, "test:partial", lambda: df)
+    assert sorted(r.id for r in kept.collect()) == list(range(5))
 
 
 def test_cached_pivots_equal_direct_training(spark, tmp_path):
@@ -119,7 +140,7 @@ def test_graph_queries_scan_the_edge_store_not_the_join(spark):
     pairs_plan = spark._jvm.PythonSQLUtils.explainString(
         pairs._jdf.queryExecution(), "formatted"
     )
-    assert "sparkgraft_edges" in pairs_plan
+    assert "derived/edges_" in pairs_plan
     assert "lineitem" not in pairs_plan
     plan = _plan_of(spark, "pagerank")
     assert "lineitem" not in plan and "orders.parquet" not in plan
@@ -133,7 +154,7 @@ def test_dedup_queries_scan_the_signature_store_not_the_udf(spark, monkeypatch):
     bucket cap, so the store scan shows as Scan ExistingRDD in the
     final plan (the jaccard test's situation).  Same two-part guard:
     (1) the store function's OWN plan is a pure parquet read of
-    sparkgraft_minhash, and (2) the query provably routes through
+    derived/minhash_, and (2) the query provably routes through
     minhash_signature_store (a revert to inline signatures stops
     calling it and goes red)."""
     from mqtt2clickhouse_spark.ops import dedup as dd
@@ -147,7 +168,7 @@ def test_dedup_queries_scan_the_signature_store_not_the_udf(spark, monkeypatch):
     splan = spark._jvm.PythonSQLUtils.explainString(
         stored._jdf.queryExecution(), "formatted"
     )
-    assert "sparkgraft_minhash" in splan
+    assert "derived/minhash_" in splan
     assert "ArrowEvalPython" not in splan
     assert "documents.parquet" not in splan
 
@@ -176,7 +197,7 @@ def test_jaccard_routes_through_the_shingle_store(spark, monkeypatch):
     here — jaccard_pairs pins its diamond with localCheckpoint, so every
     input shows as Scan ExistingRDD regardless of source — so the guard
     is two-part: (1) the store function's OWN plan is a pure parquet
-    read of sparkgraft_shingles with no re-shingling Arrow pass, and
+    read of derived/shingles_ with no re-shingling Arrow pass, and
     (2) the query provably routes through shingle_store (a revert to
     direct shingle_rows stops calling it and goes red)."""
     from mqtt2clickhouse_spark.ops import dedup as dd
@@ -189,7 +210,7 @@ def test_jaccard_routes_through_the_shingle_store(spark, monkeypatch):
     splan = spark._jvm.PythonSQLUtils.explainString(
         stored._jdf.queryExecution(), "formatted"
     )
-    assert "sparkgraft_shingles" in splan
+    assert "derived/shingles_" in splan
     assert "ArrowEvalPython" not in splan
     assert "documents.parquet" not in splan
 
@@ -239,7 +260,7 @@ def test_lpa_consumers_scan_the_label_store_not_the_rounds(spark, monkeypatch):
     sf = "/root/testdata/sf0.001"
     gq._lpa_labels_stored(spark, sf).count()
     plan = _plan_of(spark, "label_propagation")
-    assert "sparkgraft_lpa" in plan
+    assert "derived/lpa_" in plan
     assert "lineitem" not in plan
 
     calls: list[str] = []
@@ -290,7 +311,7 @@ def test_copurchase_consumers_scan_the_cop_store(spark, monkeypatch):
     directly; triangle_count and graph_kcore pin intermediates with
     localCheckpoint (every input shows as ExistingRDD), so they are
     guarded in two parts like dedup_jaccard: (1) the store function's
-    OWN plan is a pure parquet read of sparkgraft_cop — no lineitem
+    OWN plan is a pure parquet read of derived/cop_ — no lineitem
     scan, no basket aggregation — and (2) both queries provably route
     through _copurchase_edges (a revert to an inline basket build stops
     calling it and goes red)."""
@@ -302,11 +323,11 @@ def test_copurchase_consumers_scan_the_cop_store(spark, monkeypatch):
     eplan = spark._jvm.PythonSQLUtils.explainString(
         edges._jdf.queryExecution(), "formatted"
     )
-    assert "sparkgraft_cop" in eplan
+    assert "derived/cop_" in eplan
     assert "lineitem" not in eplan
 
     plan = _plan_of(spark, "link_prediction_ra")
-    assert "sparkgraft_cop" in plan
+    assert "derived/cop_" in plan
     assert "lineitem" not in plan
 
     calls: list[str] = []
@@ -340,45 +361,14 @@ def test_ann_queries_scan_the_pivot_store_not_retraining(spark):
     kmeans_pivots_cached(emb, "/root/testdata/sf0.001", k=16, iters=2).count()
     for name in ("similarity_ann_kmeans", "kmeans_silhouette", "semantic_dedup"):
         plan = _plan_of(spark, name)
-        assert "sparkgraft_pivots" in plan, name
+        assert "derived/pivots_" in plan, name
     # the reverted form is distinguishable: direct training yields
     # driver-local pivots, no store read in the plan
     direct = kmeans_pivots(emb, k=16, iters=2)
     dplan = spark._jvm.PythonSQLUtils.explainString(
         direct._jdf.queryExecution(), "formatted"
     )
-    assert "sparkgraft_pivots" not in dplan
-
-
-def test_materialize_once_atomic_publish(spark, tmp_path):
-    """ops.store.materialize_once: builds appear atomically (never a
-    half-written destination), an existing complete store is never
-    rebuilt, and garbage at the destination (no _SUCCESS) is replaced."""
-    from mqtt2clickhouse_spark.ops.store import materialize_once
-
-    path = str(tmp_path / "store")
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    out1 = {tuple(r) for r in materialize_once(df, path).collect()}
-    assert out1 == {(i, 2 * i) for i in range(10)}
-    marker = os.path.join(path, "_SUCCESS")
-    first = os.path.getmtime(marker)
-    # complete store: second call must not rebuild
-    materialize_once(spark.range(3).selectExpr("id", "id AS v"), path).collect()
-    assert os.path.getmtime(marker) == first
-    out2 = {tuple(r) for r in materialize_once(df, path).collect()}
-    assert out2 == out1
-    # garbage destination (crashed old layout, no _SUCCESS): replaced
-    bad = str(tmp_path / "bad")
-    os.makedirs(bad)
-    with open(os.path.join(bad, "junk"), "w") as f:
-        f.write("x")
-    out3 = {tuple(r) for r in materialize_once(df, bad).collect()}
-    assert out3 == out1
-    assert os.path.exists(os.path.join(bad, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(bad, "junk"))
-    # no stray .build temp dirs left behind
-    strays = [p for p in os.listdir(tmp_path) if ".build." in p]
-    assert not strays, strays
+    assert "derived/pivots_" not in dplan
 
 
 def test_shingle_and_signature_stores_equal_direct(spark, tmp_path):
@@ -409,642 +399,51 @@ def test_shingle_and_signature_stores_equal_direct(spark, tmp_path):
     assert stored_sig == direct_sig and stored_sig
 
 
-def test_regenerated_fixture_misses_the_cache(spark, sf_copy):
-    _trade_pairs(spark, sf_copy).count()
-    old_path = _edge_cache_path(sf_copy)
-    # simulate a fixture regeneration: same bytes, newer mtime
-    li = os.path.join(sf_copy, "lineitem.parquet")
-    os.utime(li, (os.path.getmtime(li) + 100, os.path.getmtime(li) + 100))
-    new_path = _edge_cache_path(sf_copy)
-    assert new_path != old_path, "stale cache would be served"
-    # and the new key transparently rebuilds
-    assert _trade_pairs(spark, sf_copy).count() > 0
-    assert os.path.exists(os.path.join(new_path, "_SUCCESS"))
+_LIFETIME_CHILD = r"""
+import json, sys
+from pyspark.sql import functions as F
+from mqtt2clickhouse_spark.ops import dedup
+from mqtt2clickhouse_spark.queries import QUERIES
+from mqtt2clickhouse_spark.session import get_spark
+
+if sys.argv[1] == "drop_doc0":
+    real = dedup.shingle_rows
+    dedup.shingle_rows = lambda df, id_col, text_col, n=3: real(
+        df.filter(F.col(id_col) != 0), id_col, text_col, n)
+spark = get_spark("store-lifetime", cpus=2)
+rows = QUERIES["ngram_novelty"].spark_fn(spark, sys.argv[2]).collect()
+print(json.dumps(sorted(map(list, rows))))
+spark.stop()
+"""
 
 
-def test_same_second_rewrite_with_different_content_misses(spark, sf_copy):
-    """The r8 keys truncated mtime to whole seconds, so a fixture
-    regenerated within the same second as the old one silently HIT the
-    cache (ADVICE r8).  The fingerprint key (ns-mtime + size + parquet
-    footer digest) must miss: rewrite lineitem with different CONTENT,
-    then force the stat clock back to the original second."""
-    old_path = _edge_cache_path(sf_copy)
-    li = os.path.join(sf_copy, "lineitem.parquet")
-    st = os.stat(li)
-    spark.read.parquet(li).limit(50).write.mode("overwrite").parquet(
-        li + ".new"
-    )
-    # replace with the different-content file, then pin mtime to the
-    # ORIGINAL nanosecond timestamp (cp -p / archive-extraction shape)
-    part = [
-        f for f in os.listdir(li + ".new") if f.endswith(".parquet")
-    ][0]
-    shutil.rmtree(li) if os.path.isdir(li) else os.remove(li)
-    shutil.copyfile(os.path.join(li + ".new", part), li)
-    os.utime(li, ns=(st.st_atime_ns, st.st_mtime_ns))
-    new_path = _edge_cache_path(sf_copy)
-    assert new_path != old_path, (
-        "same-second different-content rewrite served a stale store"
-    )
+def test_derived_tables_do_not_outlive_the_process(tmp_path):
+    """Two processes over one temp dir: the second, whose shingling
+    drops document 0, must build its own shingle table, not read the
+    first one's.  A store that outlived its process hid exactly this
+    kind of change from the parity sweep.  Neither process may leave a
+    derived table behind."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_LOCAL_DIRS=str(tmp_path))
 
-
-def test_build_prunes_dead_generations(spark, sf_copy):
-    """A successful build sweeps dead sibling generations of the same
-    (sf, params) config — without this, every fixture regeneration or
-    version bump strands a full store under /tmp forever (ADVICE r8)."""
-    import time as _time
-
-    from mqtt2clickhouse_spark.ops.store import _PRUNE_GRACE_SECONDS
-
-    _trade_pairs(spark, sf_copy).count()
-    old_path = _edge_cache_path(sf_copy)
-    assert os.path.exists(old_path)
-    # age the old generation past the cross-session grace window (the
-    # sweep deliberately spares recent generations — its own test)
-    aged = _time.time() - _PRUNE_GRACE_SECONDS - 60
-    os.utime(old_path, (aged, aged))
-    li = os.path.join(sf_copy, "lineitem.parquet")
-    os.utime(li, (os.path.getmtime(li) + 100, os.path.getmtime(li) + 100))
-    new_path = _edge_cache_path(sf_copy)
-    _trade_pairs(spark, sf_copy).count()  # rebuild under the new key
-    assert os.path.exists(os.path.join(new_path, "_SUCCESS"))
-    assert not os.path.exists(old_path), "dead generation not pruned"
-
-
-def test_fixture_fingerprint_sees_directory_fixture_content(tmp_path):
-    """Spark-written parquet fixtures are DIRECTORIES of part files;
-    fixture_fingerprint's open() threw IsADirectoryError and every
-    directory fixture collapsed to the constant 'absent' marker —
-    found in r10 when the uniform and skewed R=30 probe corpora (same
-    path shape, different content) fingerprinted IDENTICALLY, meaning
-    a regenerated directory fixture would serve a stale store.  The
-    fingerprint must aggregate the directory's data files: different
-    part-file content (same names, sizes pinned equal, mtimes pinned
-    equal) must change it, and it must differ from a missing path's."""
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    def mkdir_fixture(name: str, tail: bytes) -> str:
-        d = tmp_path / name
-        (d).mkdir()
-        (d / "_SUCCESS").write_bytes(b"")
-        (d / "part-00000.snappy.parquet").write_bytes(b"A" * 512 + tail)
-        (d / "part-00001.snappy.parquet").write_bytes(b"B" * 1024)
-        return str(d)
-
-    a = mkdir_fixture("docs_a.parquet", b"X" * 64)
-    b = mkdir_fixture("docs_b.parquet", b"Y" * 64)
-    # pin identical stat signatures so only CONTENT can distinguish
-    for d in (a, b):
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), ns=(1_700_000_000_000_000_000,) * 2)
-    missing = str(tmp_path / "nope.parquet")
-    fa, fb, fm = (fixture_fingerprint(p) for p in (a, b, missing))
-    assert fa != fb, "directory fixtures with different content collided"
-    assert fa != fm and fb != fm, "directory fixture fingerprinted as absent"
-    # stable across calls
-    assert fa == fixture_fingerprint(a)
-    # and a part-file rewrite (same stats) moves it
-    with open(os.path.join(a, "part-00001.snappy.parquet"), "wb") as f:
-        f.write(b"C" * 1024)
-    os.utime(
-        os.path.join(a, "part-00001.snappy.parquet"),
-        ns=(1_700_000_000_000_000_000,) * 2,
-    )
-    assert fixture_fingerprint(a) != fa
-
-
-def test_fixture_fingerprint_sees_nested_partitioned_fixture(tmp_path):
-    """A partitionBy-written dataset nests part files under key=value
-    SUBDIRECTORIES; the first directory-aware fingerprint opened each
-    entry as a file, so one nested dir threw IsADirectoryError and the
-    whole fixture collapsed to the constant 'absent' marker again (the
-    exact bug the directory support fixed, one level down).  Nested
-    content must distinguish fixtures, and a vanished single entry must
-    not collapse the whole path to 'absent'."""
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    def mk(sf: str, tail: bytes) -> str:
-        # the REAL collision shape: the same basename (documents.parquet)
-        # under different sf_dirs — the 'absent' marker embeds only the
-        # basename, so an absent-collapse makes these IDENTICAL
-        d = tmp_path / sf / "documents.parquet"
-        for part in ("day=1", "day=2"):
-            (d / part).mkdir(parents=True)
-            (d / part / "part-00000.parquet").write_bytes(b"A" * 256 + tail)
-        for root, _, files in __import__("os").walk(d):
-            for f in files:
-                os.utime(
-                    os.path.join(root, f),
-                    ns=(1_700_000_000_000_000_000,) * 2,
-                )
-        return str(d)
-
-    a = mk("sf_uniform", b"X" * 32)
-    b = mk("sf_skewed", b"Y" * 32)
-    missing = str(tmp_path / "sf_gone" / "documents.parquet")
-    fa, fb, fm = (fixture_fingerprint(p) for p in (a, b, missing))
-    assert fa != fb, "nested fixtures with different content collided"
-    assert fa != fm and fb != fm, "nested fixture fingerprinted as absent"
-    # content sensitivity one level down (stats pinned equal above)
-    with open(os.path.join(a, "day=2", "part-00000.parquet"), "wb") as f:
-        f.write(b"A" * 256 + b"Z" * 32)
-    os.utime(
-        os.path.join(a, "day=2", "part-00000.parquet"),
-        ns=(1_700_000_000_000_000_000,) * 2,
-    )
-    assert fixture_fingerprint(a) != fa, (
-        "nested part-file rewrite did not move the fingerprint"
-    )
-
-
-def test_prune_siblings_age_gates_recent_generations(tmp_path):
-    """The cross-session grace window must live in the SHARED prune
-    primitive, not just the layout consumer: a session mid-query over
-    the previous edge/LPA/cop/shingle generation (its fixture was
-    regenerated under it) loses its store to the rebuilding session's
-    immediate sweep.  A dead generation younger than the grace window
-    survives; older debris is swept."""
-    import time as _time
-
-    from mqtt2clickhouse_spark.ops.store import (
-        _PRUNE_GRACE_SECONDS,
-        _prune_siblings,
-    )
-
-    parent = tmp_path / "sparkgraft_edges"
-    prefix = "data_sf0_1_"
-    live = prefix + "v2_f" + "a" * 12
-    recent = prefix + "v1_f" + "b" * 12   # just-regenerated: in use?
-    stale = prefix + "v1_f" + "c" * 12    # old debris: sweep
-    for d in (live, recent, stale):
-        (parent / d).mkdir(parents=True)
-    old = _time.time() - _PRUNE_GRACE_SECONDS - 60
-    os.utime(parent / stale, (old, old))
-    _prune_siblings(str(parent / live), prefix)
-    assert (parent / live).exists()
-    assert (parent / recent).exists(), (
-        "a generation inside the grace window was swept — a concurrent "
-        "session reading it would fail mid-query"
-    )
-    assert not (parent / stale).exists(), "stale generation not pruned"
-
-
-def test_prune_siblings_spares_prefix_extending_sibling_sf(tmp_path):
-    """_prune_siblings must delete ONLY generation-shaped names
-    (version + fingerprint, or the legacy mtime scheme) under the
-    prefix — a DIFFERENT sf_dir whose sanitized path extends this one
-    (/data/sf0.1 vs /data/sf0.1_copy) produces tags that share the
-    prefix, and prefix-only matching swept that sibling's LIVE store,
-    failing a concurrent reader mid-query (ADVICE r9)."""
-    from mqtt2clickhouse_spark.ops.store import _prune_siblings
-
-    parent = tmp_path / "sparkgraft_edges"
-    prefix = "data_sf0_1_"
-    live = prefix + "v2_f" + "a" * 12
-    dead = prefix + "v1_f" + "b" * 12          # old generation: sweep
-    legacy = prefix + "v1_m1700000000"         # pre-fingerprint: sweep
-    sibling = "data_sf0_1_copy_v2_f" + "c" * 12  # OTHER sf_dir's LIVE store
-    junk = prefix + "notes.txt"                # not generation-shaped
-    for d in (live, dead, legacy, sibling, junk):
-        (parent / d).mkdir(parents=True)
-    # place every candidate beyond the cross-session grace window so
-    # only the SHAPE check decides (age gating has its own test)
-    import time as _time
-
-    from mqtt2clickhouse_spark.ops.store import _PRUNE_GRACE_SECONDS
-
-    old = _time.time() - _PRUNE_GRACE_SECONDS - 60
-    for d in (dead, legacy, sibling, junk):
-        os.utime(parent / d, (old, old))
-    _prune_siblings(str(parent / live), prefix)
-    assert (parent / live).exists()
-    assert not (parent / dead).exists(), "dead generation not pruned"
-    assert not (parent / legacy).exists(), "legacy mtime generation not pruned"
-    assert (parent / sibling).exists(), "a sibling sf_dir's LIVE store was swept"
-    assert (parent / junk).exists(), "non-generation name was swept"
-
-
-def test_graph_store_prune_prefixes_include_params(tmp_path):
-    """The LPA and co-purchase stores key params (rounds / cap+minw)
-    BETWEEN the sf prefix and the generation suffix; with the
-    generation-shape check in _prune_siblings, an sf-only prune prefix
-    would leave their dead generations unprunable forever.  Each
-    store's prune prefix must therefore extend to the params segment,
-    so remainder == version + fingerprint exactly."""
-    import re
-
-    from mqtt2clickhouse_spark.ops.store import _prune_siblings
-    from mqtt2clickhouse_spark.queries import graph_queries as gq
-
-    sf = str(tmp_path / "sf0.1")
-    os.makedirs(sf)
-    lpa_prefix = gq._lpa_prune_prefix(sf)
-    cop_prefix = gq._cop_prune_prefix(sf)
-    # prefixes must extend the sf prefix with the params segment
-    base = gq._edge_cache_prefix(sf)
-    assert lpa_prefix.startswith(base) and len(lpa_prefix) > len(base)
-    assert cop_prefix.startswith(base) and len(cop_prefix) > len(base)
-    # and the live tag's remainder under that prefix is generation-shaped
-    import time as _time
-
-    from mqtt2clickhouse_spark.ops.store import _PRUNE_GRACE_SECONDS
-
-    old = _time.time() - _PRUNE_GRACE_SECONDS - 60
-    for prefix, parent_name in ((lpa_prefix, "lpa"), (cop_prefix, "cop")):
-        parent = tmp_path / f"sparkgraft_{parent_name}"
-        live = prefix + "v2_f" + "a" * 12
-        dead = prefix + "v1_f" + "b" * 12
-        for d in (live, dead):
-            (parent / d).mkdir(parents=True)
-        os.utime(parent / dead, (old, old))
-        _prune_siblings(str(parent / live), prefix)
-        assert (parent / live).exists()
-        assert not (parent / dead).exists(), (
-            f"{parent_name}: dead generation not pruned under params prefix"
+    def run(mode: str) -> set[int]:
+        proc = subprocess.run(
+            [sys.executable, "-c", _LIFETIME_CHILD, mode, sf_dir],
+            cwd=repo, env=env, capture_output=True, text=True, timeout=600,
         )
-    # the committed store paths really do use params-inclusive tags of
-    # that shape (live path basename == prune_prefix + generation)
-    lpa_tag = os.path.basename(gq._lpa_store_path(sf))
-    cop_tag = os.path.basename(gq._cop_store_path(sf))
-    gen = re.compile(r"v\d+_(f[0-9a-f]{12}|m\d+)")
-    assert lpa_tag.startswith(lpa_prefix) and gen.fullmatch(lpa_tag[len(lpa_prefix):])
-    assert cop_tag.startswith(cop_prefix) and gen.fullmatch(cop_tag[len(cop_prefix):])
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        left = [
+            os.path.join(d, n)
+            for d, dirs, _files in os.walk(tmp_path)
+            for n in dirs
+            if n.startswith("sparkgraft_") or n == "derived"
+        ]
+        assert not left, left
+        return {r[0] for r in json.loads(proc.stdout.splitlines()[-1])}
 
-
-def test_materialize_once_cleans_tmp_on_failed_build(spark, tmp_path):
-    """A build whose df.write throws must not strand a .build dir
-    (ADVICE r8: repeated failed builds accumulated unbounded garbage)."""
-    from mqtt2clickhouse_spark.ops.store import materialize_once
-
-    path = str(tmp_path / "store")
-    bad = spark.range(10).selectExpr(
-        "id", "assert_true(id < 5, 'boom') AS v"
-    )
-    with pytest.raises(Exception):
-        materialize_once(bad, path)
-    strays = [p for p in os.listdir(tmp_path) if ".build." in p]
-    assert not strays, strays
-    assert not os.path.exists(path)
-
-
-def test_concurrent_builders_race_safely(spark, tmp_path):
-    """Two builders racing the same key (with pre-existing garbage at
-    the destination — the path that exercises the O_EXCL lock) must
-    end with exactly one complete store, identical contents for both
-    readers, and no stray .build/.lock/.garbage artifacts."""
-    import threading
-
-    from mqtt2clickhouse_spark.ops.store import materialize_once
-
-    path = str(tmp_path / "store")
-    os.makedirs(path)
-    with open(os.path.join(path, "junk"), "w") as f:
-        f.write("x")  # garbage: no _SUCCESS
-    df = spark.range(100).selectExpr("id", "id * 3 AS v")
-    expected = {(i, 3 * i) for i in range(100)}
-    results: list[set] = [None, None]
-    errs: list[Exception] = []
-
-    def build(slot: int) -> None:
-        try:
-            results[slot] = {
-                tuple(r) for r in materialize_once(df, path).collect()
-            }
-        except Exception as exc:  # pragma: no cover - failure diagnostics
-            errs.append(exc)
-
-    threads = [threading.Thread(target=build, args=(i,)) for i in (0, 1)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join(timeout=120)
-    assert not errs, errs
-    assert results[0] == expected and results[1] == expected
-    assert os.path.exists(os.path.join(path, "_SUCCESS"))
-    assert not os.path.exists(os.path.join(path, "junk"))
-    strays = [
-        p
-        for p in os.listdir(tmp_path)
-        if ".build." in p or p.endswith(".lock") or ".garbage." in p
-    ]
-    assert not strays, strays
-
-
-def test_layout_prune_age_gates_recent_generations(tmp_path):
-    """Cross-session safety (ADVICE r9): a concurrent session still
-    running over the PREVIOUS fixture generation holds Spark catalog
-    tables whose external /tmp paths live under the old generation's
-    root — pruning it on this session's first _layout_root call fails
-    that session's bucketed-table queries mid-run.  The sweep must
-    age-gate: a dead generation younger than the grace window survives
-    (the concurrent session's working set); only stale debris is
-    swept."""
-    import os as _os
-    import time as _time
-
-    from mqtt2clickhouse_spark.queries import layout_queries as lq
-
-    for name in ("events", "lineitem", "orders"):
-        with open(tmp_path / f"{name}.parquet", "wb") as f:
-            f.write(b"A" * 512)
-    sf = str(tmp_path)
-    live = lq._tag(sf)
-    parent = _os.path.join(
-        __import__("tempfile").gettempdir(), "sparkgraft_layout"
-    )
-    pfx = lq._tag_prefix(sf)
-    recent = pfx + "v0_f" + "1" * 12   # just-created: a live session's gen
-    stale = pfx + "v0_f" + "2" * 12    # old debris: sweepable
-    for d in (live, recent, stale):
-        _os.makedirs(_os.path.join(parent, d), exist_ok=True)
-    try:
-        sub = _os.path.join(parent, live, "events_by_day")
-        _os.makedirs(sub, exist_ok=True)
-        open(_os.path.join(sub, "_SUCCESS"), "w").close()
-        old = _time.time() - lq._PRUNE_GRACE_SECONDS - 60
-        _os.utime(_os.path.join(parent, stale), (old, old))
-        lq._prune_dead_layouts(sf, live)
-        assert _os.path.exists(_os.path.join(parent, recent)), (
-            "a generation inside the grace window was swept — a "
-            "concurrent session over it would fail mid-run"
-        )
-        assert not _os.path.exists(_os.path.join(parent, stale)), (
-            "stale generation beyond the grace window not pruned"
-        )
-    finally:
-        for d in (live, recent, stale):
-            shutil.rmtree(_os.path.join(parent, d), ignore_errors=True)
-
-
-def test_layout_tag_is_content_sensitive_and_prunes(tmp_path):
-    """The layout store (queries/layout_queries) was the last store
-    keyed on second-truncated mtimes — the ADVICE r8 staleness class.
-    Its tag must now move on a same-second different-content rewrite
-    (fixture_fingerprint key) and dead generations must be swept by
-    the prune."""
-    import os as _os
-
-    from mqtt2clickhouse_spark.queries import layout_queries as lq
-
-    for name in ("events", "lineitem", "orders"):
-        with open(tmp_path / f"{name}.parquet", "wb") as f:
-            f.write(b"A" * 512)
-    sf = str(tmp_path)
-    tag1 = lq._tag(sf)
-    # same-second rewrite with different content: pin the mtime back
-    li = _os.path.join(sf, "lineitem.parquet")
-    st = _os.stat(li)
-    with open(li, "wb") as f:
-        f.write(b"B" * 512)
-    _os.utime(li, ns=(st.st_atime_ns, st.st_mtime_ns))
-    tag2 = lq._tag(sf)
-    assert tag2 != tag1, "stale layout would be served"
-    # pruning: a dead generation of the same sf prefix is swept — but
-    # only once the LIVE generation holds a completed build, never a
-    # different sf_dir whose sanitized path extends this one, and never
-    # legacy non-generation names
-    parent = _os.path.join(
-        __import__("tempfile").gettempdir(), "sparkgraft_layout"
-    )
-    pfx = lq._tag_prefix(sf)
-    legacy = pfx + "v1_m1700000000"  # pre-fingerprint scheme: sweepable
-    extends = pfx + "extra_v1_f" + "0" * 12  # a DIFFERENT sf_dir's live tag
-    for d in (tag1, tag2, legacy, extends):
-        _os.makedirs(_os.path.join(parent, d), exist_ok=True)
-    # place every dead candidate beyond the cross-session grace window
-    # (age-gating is pinned by test_layout_prune_age_gates_recent_…)
-    import time as _time
-
-    old = _time.time() - lq._PRUNE_GRACE_SECONDS - 60
-    for d in (tag1, legacy, extends):
-        _os.utime(_os.path.join(parent, d), (old, old))
-    try:
-        # live generation has no completed build yet: nothing swept
-        lq._prune_dead_layouts(sf, tag2)
-        assert _os.path.exists(_os.path.join(parent, tag1))
-        # complete a build under the live generation
-        sub = _os.path.join(parent, tag2, "events_by_day")
-        _os.makedirs(sub, exist_ok=True)
-        open(_os.path.join(sub, "_SUCCESS"), "w").close()
-        lq._prune_dead_layouts(sf, tag2)
-        assert not _os.path.exists(_os.path.join(parent, tag1))
-        assert not _os.path.exists(_os.path.join(parent, legacy))
-        assert _os.path.exists(_os.path.join(parent, tag2))
-        assert _os.path.exists(_os.path.join(parent, extends))
-    finally:
-        for d in (tag1, tag2, legacy, extends):
-            shutil.rmtree(_os.path.join(parent, d), ignore_errors=True)
-
-
-def test_fixture_fingerprint_distinguishes_content(tmp_path):
-    """Unit contract of the key ingredient: equal-size equal-mtime
-    files with different bytes fingerprint differently."""
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    a, b = str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")
-    with open(a, "wb") as f:
-        f.write(b"x" * 1000)
-    with open(b, "wb") as f:
-        f.write(b"y" * 1000)
-    st = os.stat(a)
-    os.utime(b, ns=(st.st_atime_ns, st.st_mtime_ns))
-    assert fixture_fingerprint(a) != fixture_fingerprint(b)
-    # and identical stat+content fingerprints equal (stability)
-    assert fixture_fingerprint(a) == fixture_fingerprint(a)
-    # absent files are a distinct, stable bucket
-    absent = str(tmp_path / "missing.parquet")
-    assert fixture_fingerprint(absent) == fixture_fingerprint(absent)
-    assert fixture_fingerprint(absent) != fixture_fingerprint(a)
-
-
-def test_prune_siblings_sweeps_dead_generation_build_debris(tmp_path):
-    """A builder that crashes mid-build leaves '<gen>.build.<uuid>'
-    dirs and '<gen>.lock' files; once that generation is DEAD its
-    debris must be reclaimed by the next publish's sweep (ADVICE r10:
-    the _GEN_RE fullmatch restraint re-introduced the stranded-/tmp
-    leak for this class).  The LIVE generation's own in-flight build
-    state is spared (a concurrent builder of the same key may own it),
-    and debris inside the grace window survives."""
-    import time as _time
-
-    from mqtt2clickhouse_spark.ops.store import (
-        _PRUNE_GRACE_SECONDS,
-        _prune_siblings,
-    )
-
-    parent = tmp_path / "sparkgraft_edges"
-    prefix = "data_sf0_1_"
-    live = prefix + "v2_f" + "a" * 12
-    dead_build = prefix + "v1_f" + "b" * 12 + ".build." + "0" * 32
-    dead_lock = prefix + "v1_f" + "b" * 12 + ".lock"
-    dead_garbage = prefix + "v1_f" + "b" * 12 + ".garbage." + "1" * 32
-    live_build = live + ".build." + "2" * 32   # live tag's in-flight state
-    live_lock = live + ".lock"
-    young_build = prefix + "v1_f" + "c" * 12 + ".build." + "3" * 32
-    (parent / live).mkdir(parents=True)
-    for d in (dead_build, dead_garbage, live_build, young_build):
-        (parent / d).mkdir()
-    for fname in (dead_lock, live_lock):
-        (parent / fname).write_bytes(b"")
-    old = _time.time() - _PRUNE_GRACE_SECONDS - 60
-    # age the LIVE tag's debris past the grace window too (r11 review):
-    # it must survive on the live-tag spare alone, not because it was
-    # young — a >30-min in-flight build of the live generation is the
-    # exact thing a concurrent builder may still own
-    for n in (dead_build, dead_lock, dead_garbage, live_build, live_lock):
-        os.utime(parent / n, (old, old))
-    _prune_siblings(str(parent / live), prefix)
-    assert (parent / live).exists()
-    assert not (parent / dead_build).exists(), "dead gen .build not swept"
-    assert not (parent / dead_lock).exists(), "dead gen .lock not swept"
-    assert not (parent / dead_garbage).exists(), "dead gen .garbage not swept"
-    assert (parent / live_build).exists(), "live tag's in-flight build swept"
-    assert (parent / live_lock).exists(), "live tag's lock swept"
-    assert (parent / young_build).exists(), "grace-window debris swept"
-
-
-def test_fixture_fingerprint_survives_symlink_cycle(tmp_path):
-    """A symlinked cycle inside a fixture directory must not raise
-    RecursionError (ADVICE r10: the recursive walk had no symlink or
-    depth guard, and RecursionError is not an OSError so it propagated
-    out of fixture_fingerprint).  Symlinked entries contribute a link
-    marker; retargeting the link still changes the fingerprint."""
-    from mqtt2clickhouse_spark.ops.store import fixture_fingerprint
-
-    d = tmp_path / "fix"
-    d.mkdir()
-    (d / "part-00000.parquet").write_bytes(b"A" * 128)
-    # short link name: the path grows 2 chars/level, so Python's
-    # recursion limit fires long before the kernel's ENAMETOOLONG
-    os.symlink(str(d), str(d / "l"))  # cycle: d/l -> d
-    fp1 = fixture_fingerprint(str(d))  # must not RecursionError
-    assert fp1 and fp1 != fixture_fingerprint(str(tmp_path / "missing"))
-    # retargeting the symlink changes the key
-    os.remove(d / "l")
-    other = tmp_path / "other"
-    other.mkdir()
-    os.symlink(str(other), str(d / "l"))
-    fp2 = fixture_fingerprint(str(d))
-    assert fp2 != fp1
-    # the link is recorded, never FOLLOWED: content behind it does not
-    # leak into the walk (pre-guard, the walk descended 40 ELOOP levels
-    # into the cycle and into any external link target)
-    (other / "external.bin").write_bytes(b"Z" * 256)
-    assert fixture_fingerprint(str(d)) == fp2
-
-
-def test_fixture_fingerprint_bounds_tail_reads_on_huge_directories(
-    tmp_path, monkeypatch
-):
-    """At a real deployment's 10^4-part partitioned table, a per-entry
-    open+tail-read per store-key lookup is a metadata storm (VERDICT
-    r10 scale nit).  The walk must stat EVERY entry (so any one-part
-    rewrite still changes the key) but pay the open+4KB tail read on a
-    bounded, name-deterministic sample only."""
-    from mqtt2clickhouse_spark.ops import store as store_mod
-
-    d = tmp_path / "big"
-    d.mkdir()
-    n_files = 2000
-    for i in range(n_files):
-        (d / f"part-{i:05d}.parquet").write_bytes(b"x" * 64)
-    opens = {"n": 0}
-    real = store_mod._tail_digest
-
-    def counting(path, size):
-        opens["n"] += 1
-        return real(path, size)
-
-    monkeypatch.setattr(store_mod, "_tail_digest", counting)
-    fp1 = store_mod.fixture_fingerprint(str(d))
-    assert opens["n"] <= 64, (
-        f"{opens['n']} tail reads on a {n_files}-entry directory — "
-        "the per-lookup open storm the bound exists to prevent"
-    )
-    # an in-place rewrite of ONE part file (any file, sampled or not)
-    # must still change the key: its stat line is always included
-    victim = d / f"part-{n_files - 1:05d}.parquet"
-    st = os.stat(victim)
-    victim.write_bytes(b"y" * 64)
-    os.utime(victim, ns=(st.st_mtime_ns + 1_000_000, st.st_mtime_ns + 1_000_000))
-    fp2 = store_mod.fixture_fingerprint(str(d))
-    assert fp2 != fp1, "one-part rewrite did not change the fingerprint"
-
-
-def test_prune_grace_keeps_old_generation_readable_under_reader(
-    spark, tmp_path, monkeypatch
-):
-    """A concurrent session holding a DataFrame over the PREVIOUS
-    generation must survive the rebuilding session's publish+prune:
-    the grace window spares the young dead generation.  The hazard is
-    real — with the grace monkeypatched to 0 the same sequence sweeps
-    the store out from under the reader (VERDICT r10 ask #4)."""
-    from mqtt2clickhouse_spark.ops import store as store_mod
-
-    def run(parent):
-        prefix = "cfg_"
-        old_path = os.path.join(parent, prefix + "v1_f" + "a" * 12)
-        new_path = os.path.join(parent, prefix + "v1_f" + "b" * 12)
-        df = spark.range(100).selectExpr("id", "id * 3 AS v")
-        store_mod.materialize_once(df, old_path)
-        reader = spark.read.parquet(old_path)  # held over the old gen
-        store_mod.materialize_once(df, new_path, prune_prefix=prefix)
-        return old_path, reader
-
-    # hazard case: grace-less prune sweeps the generation the reader
-    # holds — this is what the test must FAIL on without the window
-    monkeypatch.setattr(store_mod, "_PRUNE_GRACE_SECONDS", 0.0)
-    old_path, reader = run(str(tmp_path / "hazard"))
-    assert not os.path.exists(old_path), (
-        "hazard premise broken: grace-less prune left the old gen"
-    )
-    with pytest.raises(Exception):
-        reader.count()
-
-    # graced path (the shipped default): old generation stays readable
-    monkeypatch.setattr(store_mod, "_PRUNE_GRACE_SECONDS", 1800.0)
-    old_path, reader = run(str(tmp_path / "graced"))
-    assert os.path.exists(old_path), "graced generation was swept"
-    assert reader.count() == 100
-
-
-def test_fixture_fingerprint_sample_budget_goes_to_files(
-    tmp_path, monkeypatch
-):
-    """The tail-read sample must be drawn from FILE entries only:
-    subdirectory names never consume a slot (they recurse instead), so
-    a partitioned root whose key=value subdir names hash below every
-    file name still tail-hashes its top-level files (r11 review — the
-    all-names sample let 16 subdir names starve the files of their
-    digests, re-opening the same-stat content-swap blindspot the
-    sample was sized to keep small)."""
-    from mqtt2clickhouse_spark.ops import store as store_mod
-
-    d = tmp_path / "mixed"
-    d.mkdir()
-    # 40 subdirs + 3 files: md5 order makes it overwhelmingly likely
-    # (and with 40 names, certain enough) that 16 subdir names would
-    # win an all-names sample; assert the files are digested anyway
-    for i in range(40):
-        sub = d / f"key={i}"
-        sub.mkdir()
-        (sub / "part-0.parquet").write_bytes(b"p" * 32)
-    files = []
-    for i in range(3):
-        f = d / f"top-{i}.parquet"
-        f.write_bytes(b"x" * 64)
-        files.append(f)
-    digested = []
-    real = store_mod._tail_digest
-
-    def recording(path, size):
-        digested.append(path)
-        return real(path, size)
-
-    monkeypatch.setattr(store_mod, "_tail_digest", recording)
-    store_mod.fixture_fingerprint(str(d))
-    got = {p for p in digested if "/top-" in p}
-    assert got == {str(f) for f in files}, (
-        "top-level files lost their tail-digest slots to subdirectory "
-        f"names: digested only {sorted(got)}"
-    )
+    original = run("original")
+    changed = run("drop_doc0")
+    assert 0 in original
+    assert 0 not in changed, "the second process read the first one's shingles"
+    assert changed == original - {0}

@@ -652,7 +652,7 @@ def test_label_propagation_final_shape(spark):
     plan = plan_of(spark, "label_propagation")
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan.lower()
-    assert "sparkgraft_lpa" in plan
+    assert "derived/lpa_" in plan
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1, plan
 
     build = _lpa_labels(_sym_trade_edges(spark, SF))
