@@ -146,11 +146,18 @@ def main(argv: list[str] | None = None) -> int:
     deadline = (
         None if args.max_runtime is None else _time.monotonic() + args.max_runtime
     )
+    failed = None
     while not state["stop"].is_set():
         if deadline is not None and _time.monotonic() >= deadline:
             break
+        q = state["query"]
+        # exception(), not isActive: a topic reload stops the old query
+        # on purpose, and only a query that died sets an exception
+        failed = q.exception() if q is not None else None
+        if failed is not None:
+            print(f"ingest query failed: {failed}", file=sys.stderr, flush=True)
+            break
         if args.min_batches is not None:
-            q = state["query"]
             lp = q.lastProgress if q is not None else None
             # lastProgress reports the last COMMITTED batch id
             if lp is not None and lp.get("batchId", -1) + 1 >= args.min_batches:
@@ -161,9 +168,10 @@ def main(argv: list[str] | None = None) -> int:
     q = state["query"]
     if q is not None:
         q.stop()
-        q.awaitTermination(60)
+        if failed is None:
+            q.awaitTermination(60)
     spark.stop()
-    return 0
+    return 0 if failed is None else 1
 
 
 if __name__ == "__main__":

@@ -95,7 +95,7 @@ class SchemaRegistry:
 
     # -- persistence (C1/C2 analog: storage is the source of truth) --
     def save(self, path: str) -> None:
-        """Atomic: write-to-temp + rename.  The save runs after every
+        """Atomic: write-to-temp + rename.  The save runs in every
         batch, so an in-place truncating write would turn any process
         death during it into a corrupt registry (chaos leg 3); a failed
         dump leaves the previous file untouched.  Accepted residual:
@@ -373,7 +373,14 @@ class DemuxSink:
                 )
             )
 
-        # 3. The accepted write, with the dead-letter append — when there
+        # 3. Persist the registry BEFORE the write (DDL before INSERT,
+        #    db/db.go:226-243 then :246-271): a death in between leaves a
+        #    registered table with no rows, which reads back empty; the
+        #    other order leaves rows of a table the registry lacks, which
+        #    the next batch may register with the other type.
+        self.registry.save(self._registry_path())
+
+        # 4. The accepted write, with the dead-letter append — when there
         #    are rejects — submitted CONCURRENTLY: the two are
         #    independent scans of the (persisted) batch, so its latency
         #    is max(write, dead), not the sum.
@@ -387,7 +394,6 @@ class DemuxSink:
             if dead_written is not None:
                 dead_written.result()
 
-        self.registry.save(self._registry_path())
         n_dead = n_parse_dead + n_mismatch
         return {"accepted": n_accepted, "dead_letter": n_dead, "new_tables": len(new_tables)}
 

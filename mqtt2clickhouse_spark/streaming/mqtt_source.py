@@ -19,16 +19,18 @@ Reference behavior reproduced (SURVEY.md §2.1 S1-S4, L3):
   (client.go:102-105).  The reference's ``InsecureSkipVerify: true``
   quirk (client.go:65) is NOT carried forward.
 
-Offset semantics: MQTT has no replayable log.  The live source is
-at-least-once from the broker (QoS 1) while the process lives; offsets
-number messages as received, and ``readBetweenOffsets`` re-serves only
-the in-memory window of uncommitted rows.  Across a restart it is
-weaker, and nothing downstream makes it effectively-once today:
-``LiveMqttStreamReader`` restarts ``seq`` at 0 in every process and its
-``read`` ignores ``start``; the daemon (``__main__``) never applies
-``dedup_effectively_once``; and ``DemuxSink.foreach_batch`` ignores
-``epoch_id``, so a replayed epoch appends again.  ROADMAP item 3 holds
-the fix.
+Offset semantics: MQTT has no replayable log, so Spark's checkpoint
+carries all the offset state.  ``read(start)`` numbers rows
+``start["seq"]``, ``start["seq"] + 1``, ... and returns the next seq as
+its end offset, so a restarted query numbers on from its checkpoint and
+no seq is ever re-used.  Messages are PUBACKed (QoS 1) when they enter
+the buffer, and ``readBetweenOffsets`` re-reads nothing: a batch that
+was planned but whose sink write had not finished when the process died
+comes back empty after the restart, and its messages are lost.  A batch
+whose write finished but whose checkpoint commit did not re-runs empty,
+so the live path never writes a batch twice.  The daemon (``__main__``)
+does not apply ``dedup_effectively_once``, and ``DemuxSink.foreach_batch``
+ignores ``epoch_id``; ROADMAP item 3 tracks both.
 
 Test mode: ``.option("mode", "fake")`` generates a deterministic message
 stream (no broker, no paho needed) so the full DataSource machinery —
@@ -47,12 +49,7 @@ import queue
 import time
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 MESSAGE_DDL = "topic string, payload string, seq long, ingest_ts timestamp"
@@ -61,8 +58,8 @@ _FAKE_SENSORS = ["temp_out", "humidity", "state"]
 
 
 def _fake_rows(start: int, end: int) -> Iterator[tuple]:
-    """Deterministic message generator shared by both fake readers —
-    safe to ship to executors (pure function of the seq range)."""
+    """Deterministic message generator of the fake reader (a pure
+    function of the seq range)."""
     from datetime import datetime, timezone
 
     for n in range(start, end):
@@ -140,11 +137,16 @@ class MqttDataSource(DataSource):
       tls_config: JSON file in the reference's configTLS.json shape
                  (caPath/certPath/keyPath) — an alternative to the three
                  individual path options
-      batch_size: max messages per micro-batch.  Fake readers: default
+      batch_size: max messages per micro-batch.  Fake reader: default
                  50.  Live reader: no cap by default — the drain ends
                  when the burst does (one empty 0.1 s poll after the
                  first row) or at 1 s, and the 300-slot buffer bounds
                  memory; set it to cap a live batch explicitly
+      max_messages: total messages the fake reader generates (fake)
+
+    The live reader connects on its first ``read`` and holds no offset
+    or replay state of its own: the checkpoint's start offset numbers
+    its rows (see "Offset semantics" above).
     """
 
     @classmethod
@@ -158,26 +160,6 @@ class MqttDataSource(DataSource):
         if self.options.get("mode", "live") == "fake":
             return FakeMqttStreamReader(self.options)
         return LiveMqttStreamReader(self.options)
-
-    def streamReader(self, schema: StructType):
-        """Partitioned (executor-side) reader — Spark tries this first
-        and falls back to simpleStreamReader on PySparkNotImplementedError
-        (pyspark/sql/datasource_internal.py::_streamReader), so the
-        ``partitioned`` option selects between the two.
-
-        Scale story: SimpleDataSourceStreamReader reads on the DRIVER
-        (fine for one MQTT subscription — the broker socket is a single
-        ordered stream anyway); the partitioned reader plans per-batch
-        offset ranges as InputPartitions that EXECUTORS read in parallel
-        — the shape a replayable/sharded source (Kafka-like, or N broker
-        connections) needs."""
-        from pyspark.errors import PySparkNotImplementedError
-
-        if self.options.get("partitioned", "false") != "true":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "streamReader"}
-            )
-        return PartitionedFakeStreamReader(self.options)
 
 
 class FakeMqttStreamReader(SimpleDataSourceStreamReader):
@@ -205,55 +187,14 @@ class FakeMqttStreamReader(SimpleDataSourceStreamReader):
         return list(_fake_rows(start["seq"], end["seq"]))
 
 
-class _SeqRangePartition(InputPartition):
-    def __init__(self, start: int, end: int) -> None:
-        self.start = start
-        self.end = end
-
-
-class PartitionedFakeStreamReader(DataSourceStreamReader):
-    """Executor-parallel variant of the fake reader: each micro-batch's
-    offset range splits into ``n_partitions`` InputPartitions, and the
-    generator runs IN THE EXECUTORS (read() below is shipped pickled).
-    Same deterministic rows as FakeMqttStreamReader."""
-
-    def __init__(self, options) -> None:
-        self.batch_size = int(options.get("batch_size", 50))
-        self.max_messages = int(options.get("max_messages", 10**12))
-        self.n_partitions = int(options.get("n_partitions", 4))
-        self._offset = 0
-
-    def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def latestOffset(self) -> dict:
-        # one batch = one batch_size range PER partition (availableNow
-        # consults this once, so the whole per-trigger allotment must be
-        # admitted here)
-        self._offset = min(
-            self._offset + self.batch_size * self.n_partitions, self.max_messages
-        )
-        return {"seq": self._offset}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        s, e = start["seq"], end["seq"]
-        if e <= s:
-            return [_SeqRangePartition(s, s)]
-        per = -(-(e - s) // self.n_partitions)
-        return [
-            _SeqRangePartition(lo, min(lo + per, e)) for lo in range(s, e, per)
-        ]
-
-    def read(self, partition: _SeqRangePartition) -> Iterator[tuple]:
-        # runs on an executor python worker
-        return _fake_rows(partition.start, partition.end)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
 class LiveMqttStreamReader(SimpleDataSourceStreamReader):
     """Live-broker reader with the reference's bounded buffer.
+
+    Spark builds this reader twice per query: the source runner calls
+    ``read``, and the read planner pickles its own copy for
+    ``readBetweenOffsets``.  The constructor only parses options and the
+    broker session opens on the first ``read``, so a query holds one
+    session and the planner's copy pickles as plain options.
 
     Transport: ``paho-mqtt`` when installed; otherwise the built-in
     zero-dependency MQTT 3.1.1 client (``streaming.mqtt_wire`` — same
@@ -262,43 +203,9 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
     broker in tests/test_streaming.py."""
 
     def __init__(self, options) -> None:
-        try:
-            import paho.mqtt.client as mqtt  # noqa: F401
-        except ImportError:
-            from mqtt2clickhouse_spark.streaming import mqtt_wire as mqtt
-        self._mqtt = mqtt
         self.options = options
         cap = options.get("batch_size")
         self.batch_size = int(cap) if cap is not None else math.inf
-        self.buffer: queue.Queue = queue.Queue(maxsize=BUFFER_CAPACITY)
-        self._seq = 0
-        self._replay: dict[int, tuple] = {}
-        self._connect()
-
-    # -- pickling (Spark data-source planner) --------------------------
-    def __getstate__(self):
-        """Spark's planner worker pickles the reader when shipping the
-        read function to executors; live transport state (socket,
-        network thread, queue/client locks) must not travel.  A
-        restored copy carries the offset counter and the replay window
-        of uncommitted rows (plain dict — readBetweenOffsets needs
-        nothing else)
-        and re-creates an empty buffer; if read() is ever called on it,
-        it reconnects lazily."""
-        state = self.__dict__.copy()
-        for k in ("client", "buffer", "_mqtt"):
-            state.pop(k, None)
-        return state
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)
-        try:
-            import paho.mqtt.client as mqtt  # noqa: F401
-        except ImportError:
-            from mqtt2clickhouse_spark.streaming import mqtt_wire as mqtt
-        self._mqtt = mqtt
-        self.buffer = queue.Queue(maxsize=BUFFER_CAPACITY)
-        # no live connection; read() reconnects on demand
 
     # -- connection management (client/client.go:56-123 semantics) -----
     @staticmethod
@@ -331,8 +238,13 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
                 pass
 
     def _connect(self) -> None:
+        try:
+            import paho.mqtt.client as mqtt
+        except ImportError:
+            from mqtt2clickhouse_spark.streaming import mqtt_wire as mqtt
         opts = self.options
-        client = self._mqtt.Client()
+        self.buffer: queue.Queue = queue.Queue(maxsize=BUFFER_CAPACITY)
+        client = mqtt.Client()
         if opts.get("username"):
             client.username_pw_set(opts.get("username"), opts.get("password"))
         port = int(opts.get("port", 1883))
@@ -375,7 +287,6 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         from datetime import datetime, timezone
 
-        # an unpickled copy has no live connection yet (see __setstate__)
         if not hasattr(self, "client"):
             self._connect()
         # a dead network loop (wire-client loop_error — broker gone,
@@ -392,6 +303,7 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
                     f"MQTT network loop died ({loop_error!r}) and reconnect failed"
                 ) from exc
 
+        seq = start["seq"]
         rows = []
         deadline = time.monotonic() + 1.0
         while len(rows) < self.batch_size and time.monotonic() < deadline:
@@ -401,24 +313,17 @@ class LiveMqttStreamReader(SimpleDataSourceStreamReader):
                 if rows:
                     break  # the burst has drained
                 continue
-            row = (topic, payload, self._seq, datetime.now(tz=timezone.utc))
-            self._replay[self._seq] = row
-            self._seq += 1
-            rows.append(row)
-        return iter(rows), {"seq": self._seq}
-
-    def commit(self, end: dict) -> None:
-        # the replay window holds exactly the uncommitted seqs, however
-        # many rows one time-bounded read took
-        for k in [k for k in self._replay if k < end["seq"]]:
-            del self._replay[k]
+            rows.append((topic, payload, seq + len(rows), datetime.now(tz=timezone.utc)))
+        return iter(rows), {"seq": seq + len(rows)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        # best-effort replay from the retained window; MQTT has no log —
-        # anything older is gone (documented at-least-once semantics)
-        return iter(
-            [self._replay[s] for s in range(start["seq"], end["seq"]) if s in self._replay]
-        )
+        """Spark calls this only after a restart, for the last planned
+        batch, whose rows the new process never read.  MQTT keeps no log
+        and those messages were PUBACKed when they entered the buffer,
+        so the batch re-reads as empty: its rows are lost if the process
+        died before the batch's sink write finished, and are written
+        once if it died after."""
+        return iter(())
 
 
 def register_mqtt_source(spark) -> None:

@@ -5,12 +5,15 @@ watermarks, tumbling/sliding/session windows, stateful dedup).
 
 Delivery semantics (SURVEY.md §2.1 "Delivery semantics"): the
 reference is at-most-once across restarts (volatile channel + Memory
-tables).  Here the live MQTT path is at-least-once from the broker while
-the process lives, with three gaps: the live reader restarts ``seq`` at
-0 in every process and ignores the checkpointed start offset, the daemon
-never applies ``dedup_effectively_once``, and ``DemuxSink.foreach_batch``
-ignores ``epoch_id``, so a replayed epoch appends again.  ROADMAP item 3
-holds the fix.
+tables).  Here the live MQTT path is at-least-once from the broker into
+the reader's buffer, and the checkpoint carries the offsets: a restarted
+query numbers ``seq`` on from the checkpointed end offset.  MQTT keeps
+no log, so a batch planned before a crash re-reads as empty: lost if its
+sink write had not finished, written once if it had (see
+``streaming.mqtt_source``).  Two gaps remain, tracked in ROADMAP item 3:
+the daemon never applies ``dedup_effectively_once``, and
+``DemuxSink.foreach_batch`` ignores ``epoch_id``, so a replayed epoch of
+a replayable source appends again.
 """
 
 from __future__ import annotations
@@ -81,9 +84,10 @@ def dedup_effectively_once(
 ) -> DataFrame:
     """At-least-once → effectively-once: drop duplicate message ids
     within the watermark horizon (bounded state, unlike a global
-    dropDuplicates).  It keys on ``seq``, which the live reader restarts
-    at 0 in every process, so the daemon does not apply it (ROADMAP
-    item 3)."""
+    dropDuplicates).  It keys on ``seq``.  The live reader numbers
+    ``seq`` on from the checkpoint, so a restart re-uses none, but a
+    QoS-1 redelivery gets a fresh ``seq`` and passes; the daemon does not
+    apply it (ROADMAP item 3)."""
     return messages.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
         ["seq"]
     )

@@ -28,17 +28,34 @@ is cold.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import math
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SMALL = "/root/testdata/sf0.1"
 R = int(os.environ.get("SPARK_GRAFT_PROBE_R", "10"))
-PROBE_DIR = f"/tmp/sparkgraft_probe_r{R}"
+
+
+@functools.cache
+def run_dir() -> str:
+    """This run's fixture directory, made on first use under ``TMPDIR``
+    and removed at exit: every run builds its fixtures afresh, so an
+    edit to the replication code is measured on its own output."""
+    d = tempfile.mkdtemp(prefix="sparkgraft_probe_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def probe_dir() -> str:
+    return os.path.join(run_dir(), f"probe_r{R}")
+
 
 #: key strides — far above any sf0.1 key so replica spaces are disjoint
 STRIDE = 100_000_000
@@ -60,10 +77,6 @@ def build_probe_fixture(spark) -> None:
     """R× block-diagonal replication of lineitem / orders / documents."""
     from pyspark.sql import functions as F
 
-    if os.path.exists(os.path.join(PROBE_DIR, "_READY")):
-        return
-    shutil.rmtree(PROBE_DIR, ignore_errors=True)
-    os.makedirs(PROBE_DIR, exist_ok=True)
     rep = F.col("rep")
 
     def replicate(name: str, cols: dict) -> None:
@@ -73,7 +86,7 @@ def build_probe_fixture(spark) -> None:
         for c, expr in cols.items():
             out = out.withColumn(c, expr)
         out.drop("rep").write.mode("overwrite").parquet(
-            os.path.join(PROBE_DIR, f"{name}.parquet")
+            os.path.join(probe_dir(), f"{name}.parquet")
         )
 
     replicate(
@@ -111,8 +124,6 @@ def build_probe_fixture(spark) -> None:
             ),
         },
     )
-    with open(os.path.join(PROBE_DIR, "_READY"), "w") as f:
-        f.write("ok")
 
 
 def time_noop(spark, fn, sf_dir: str, passes: int = 2) -> float:
@@ -152,7 +163,7 @@ def main() -> None:
     spark = get_spark("scale_probe")
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    print(f"building probe fixture R={R} under {PROBE_DIR} ...", file=sys.stderr)
+    print(f"building probe fixture R={R} under {probe_dir()} ...", file=sys.stderr)
     t0 = time.perf_counter()
     build_probe_fixture(spark)
     print(f"fixture build: {time.perf_counter() - t0:.1f}s", file=sys.stderr)
@@ -168,14 +179,14 @@ def main() -> None:
             t(spark, d, "documents"), d).count()),
     ):
         ts = {}
-        for d in (SMALL, PROBE_DIR):
+        for d in (SMALL, probe_dir()):
             start = time.perf_counter()
             build(d)
             ts[d] = time.perf_counter() - start
             release(spark)
-        builds[label] = (ts[SMALL], ts[PROBE_DIR])
+        builds[label] = (ts[SMALL], ts[probe_dir()])
         print(
-            f"{label}: sf0.1 {ts[SMALL]:.2f}s  probe {ts[PROBE_DIR]:.2f}s",
+            f"{label}: sf0.1 {ts[SMALL]:.2f}s  probe {ts[probe_dir()]:.2f}s",
             file=sys.stderr,
         )
 
@@ -184,7 +195,7 @@ def main() -> None:
         fn = QUERIES[name].spark_fn
         t_small = time_noop(spark, fn, SMALL)
         release(spark)
-        t_big = time_noop(spark, fn, PROBE_DIR)
+        t_big = time_noop(spark, fn, probe_dir())
         release(spark)
         ratio = t_big / t_small
         exponent = math.log(ratio) / math.log(R)
@@ -207,7 +218,7 @@ def main() -> None:
     from mqtt2clickhouse_spark.tables import load_table
 
     ingest: dict[str, float] = {}
-    for d in (SMALL, PROBE_DIR):
+    for d in (SMALL, probe_dir()):
         wh = _tempfile.mkdtemp(prefix="probe_wh_")
         try:
             msgs = _fan_out(
@@ -243,8 +254,8 @@ def main() -> None:
         print(f"| {label} | {a:.2f} | {b:.2f} | {b / a:.2f}x |")
     print(
         f"\ningest throughput: sf0.1 {ingest[SMALL]:.0f} rows/s; "
-        f"R={R} {ingest[PROBE_DIR]:.0f} rows/s "
-        f"({ingest[PROBE_DIR] / ingest[SMALL]:.2f}x)"
+        f"R={R} {ingest[probe_dir()]:.0f} rows/s "
+        f"({ingest[probe_dir()] / ingest[SMALL]:.2f}x)"
     )
     spark.stop()
 

@@ -51,14 +51,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_PROBE_R", "30")
 
 from scripts.scale_probe import (  # noqa: E402
-    PROBE_DIR,
     R,
     build_probe_fixture,
+    probe_dir,
     release,
+    run_dir,
     time_noop,
 )
 
-SKEW_DIR = f"/tmp/sparkgraft_skew_r{R}"
+
+def skew_root() -> str:
+    return os.path.join(run_dir(), f"skew_r{R}")
+
 
 #: the global hot keys — constant across every replica block, so the
 #: skew is a single node / single part, not one-per-block
@@ -125,7 +129,7 @@ HOT_VEC_MOD = 3
 #: a single join partition (the case AQE skew-join splitting exists
 #: for); plus ~20% of orders redirected to one custkey, feeding the
 #: salted-join guard its design-point input.  Separate fixture dir:
-#: the graph leg's SKEW_DIR lineitem redirects supp/part keys instead.
+#: the graph leg's skewed lineitem redirects supp/part keys instead.
 HOT_ORDER = 1  # exists in replica block 0 (keys there are un-strided)
 HOT_CUST = 1
 
@@ -224,12 +228,8 @@ def build_skew_fixture(spark) -> None:
     distribution — same row counts, same join cardinalities."""
     from pyspark.sql import functions as F
 
-    if os.path.exists(os.path.join(SKEW_DIR, "_READY")):
-        return
-    shutil.rmtree(SKEW_DIR, ignore_errors=True)
-    os.makedirs(SKEW_DIR, exist_ok=True)
     hot = (F.col("l_orderkey") + F.col("l_linenumber")) % HOT_MOD == 0
-    li = spark.read.parquet(os.path.join(PROBE_DIR, "lineitem.parquet"))
+    li = spark.read.parquet(os.path.join(probe_dir(), "lineitem.parquet"))
     (
         li.withColumn(
             "l_suppkey",
@@ -240,14 +240,12 @@ def build_skew_fixture(spark) -> None:
             F.when(hot, F.lit(HOT_PART)).otherwise(F.col("l_partkey")),
         )
         .write.mode("overwrite")
-        .parquet(os.path.join(SKEW_DIR, "lineitem.parquet"))
+        .parquet(os.path.join(skew_root(), "lineitem.parquet"))
     )
     shutil.copytree(
-        os.path.join(PROBE_DIR, "orders.parquet"),
-        os.path.join(SKEW_DIR, "orders.parquet"),
+        os.path.join(probe_dir(), "orders.parquet"),
+        os.path.join(skew_root(), "orders.parquet"),
     )
-    with open(os.path.join(SKEW_DIR, "_READY"), "w") as f:
-        f.write("ok")
 
 
 def build_skew_hub(spark) -> str:
@@ -262,13 +260,9 @@ def build_skew_hub(spark) -> str:
     therefore the deduped edge set — differs."""
     from pyspark.sql import functions as F
 
-    hub_dir = SKEW_DIR + HUB_DIR_SUFFIX
-    if os.path.exists(os.path.join(hub_dir, "_READY")):
-        return hub_dir
-    shutil.rmtree(hub_dir, ignore_errors=True)
-    os.makedirs(hub_dir, exist_ok=True)
+    hub_dir = skew_root() + HUB_DIR_SUFFIX
 
-    orders = spark.read.parquet(os.path.join(PROBE_DIR, "orders.parquet"))
+    orders = spark.read.parquet(os.path.join(probe_dir(), "orders.parquet"))
     hub_o = F.col("o_orderkey") % 100 < HUB_ORDER_PCT
     (
         orders.withColumn(
@@ -281,7 +275,7 @@ def build_skew_hub(spark) -> str:
         .parquet(os.path.join(hub_dir, "orders.parquet"))
     )
 
-    li = spark.read.parquet(os.path.join(PROBE_DIR, "lineitem.parquet"))
+    li = spark.read.parquet(os.path.join(probe_dir(), "lineitem.parquet"))
     hub_l = F.col("l_orderkey") % 100 < HUB_ORDER_PCT
     (
         li.withColumn(
@@ -297,8 +291,6 @@ def build_skew_hub(spark) -> str:
         .write.mode("overwrite")
         .parquet(os.path.join(hub_dir, "lineitem.parquet"))
     )
-    with open(os.path.join(hub_dir, "_READY"), "w") as f:
-        f.write("ok")
     return hub_dir
 
 
@@ -321,14 +313,14 @@ def run_hub_leg(spark) -> None:
         ("cop_store", lambda d: _copurchase_edges(spark, d).count()),
     ):
         ts = {}
-        for d in (PROBE_DIR, hub_dir):
+        for d in (probe_dir(), hub_dir):
             start = time.perf_counter()
             build(d)
             ts[d] = time.perf_counter() - start
             release(spark)
-        builds[label] = (ts[PROBE_DIR], ts[hub_dir])
+        builds[label] = (ts[probe_dir()], ts[hub_dir])
         print(
-            f"{label}: uniform {ts[PROBE_DIR]:.2f}s  hub {ts[hub_dir]:.2f}s",
+            f"{label}: uniform {ts[probe_dir()]:.2f}s  hub {ts[hub_dir]:.2f}s",
             file=sys.stderr,
         )
 
@@ -377,10 +369,7 @@ def build_skew_docs(spark) -> None:
     shingle-df-based candidate generation."""
     from pyspark.sql import functions as F
 
-    marker = os.path.join(SKEW_DIR, "_READY_DOCS")
-    if os.path.exists(marker):
-        return
-    docs = spark.read.parquet(os.path.join(PROBE_DIR, "documents.parquet"))
+    docs = spark.read.parquet(os.path.join(probe_dir(), "documents.parquet"))
     (
         docs.withColumn(
             "text",
@@ -390,10 +379,8 @@ def build_skew_docs(spark) -> None:
             ).otherwise(F.col("text")),
         )
         .write.mode("overwrite")
-        .parquet(os.path.join(SKEW_DIR, "documents.parquet"))
+        .parquet(os.path.join(skew_root(), "documents.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 def build_skew_events(spark) -> None:
@@ -405,10 +392,7 @@ def build_skew_events(spark) -> None:
     distribution."""
     from pyspark.sql import functions as F
 
-    marker = os.path.join(SKEW_DIR, "_READY_EVENTS")
-    if os.path.exists(marker):
-        return
-    ev = spark.read.parquet(os.path.join(PROBE_DIR, "events.parquet"))
+    ev = spark.read.parquet(os.path.join(probe_dir(), "events.parquet"))
     (
         ev.withColumn(
             "user_id",
@@ -417,24 +401,19 @@ def build_skew_events(spark) -> None:
             ).otherwise(F.col("user_id")),
         )
         .write.mode("overwrite")
-        .parquet(os.path.join(SKEW_DIR, "events.parquet"))
+        .parquet(os.path.join(skew_root(), "events.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 def build_skew_text(spark) -> str:
     """Skewed text corpus: the uniform replica's documents with ~30% of
     rows' text REPLACED by one global boilerplate document (same row
     count, same doc_ids/langs — only the text distribution changes).
-    Separate dir: --docs already owns SKEW_DIR/documents.parquet."""
+    Separate dir: --docs already owns skew_root()'s documents.parquet."""
     from pyspark.sql import functions as F
 
-    d = SKEW_DIR + TEXT_DIR_SUFFIX
-    marker = os.path.join(d, "_READY")
-    if os.path.exists(marker):
-        return d
-    docs = spark.read.parquet(os.path.join(PROBE_DIR, "documents.parquet"))
+    d = skew_root() + TEXT_DIR_SUFFIX
+    docs = spark.read.parquet(os.path.join(probe_dir(), "documents.parquet"))
     (
         docs.withColumn(
             "text",
@@ -445,8 +424,6 @@ def build_skew_text(spark) -> str:
         .write.mode("overwrite")
         .parquet(os.path.join(d, "documents.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
     return d
 
 
@@ -457,11 +434,8 @@ def build_skew_sink(spark) -> str:
     only the routing-key distribution changes."""
     from pyspark.sql import functions as F
 
-    d = SKEW_DIR + SINK_DIR_SUFFIX
-    marker = os.path.join(d, "_READY")
-    if os.path.exists(marker):
-        return d
-    ev = spark.read.parquet(os.path.join(PROBE_DIR, "events.parquet"))
+    d = skew_root() + SINK_DIR_SUFFIX
+    ev = spark.read.parquet(os.path.join(probe_dir(), "events.parquet"))
     hot = F.col("event_id") % HOT_SINK_MOD != 0
     (
         ev.withColumn(
@@ -474,8 +448,6 @@ def build_skew_sink(spark) -> str:
         .write.mode("overwrite")
         .parquet(os.path.join(d, "events.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
     return d
 
 
@@ -547,9 +519,6 @@ def build_probe_embeddings(spark) -> None:
 
     from scripts.scale_probe import SMALL, STRIDE
 
-    marker = os.path.join(PROBE_DIR, "_READY_EMB")
-    if os.path.exists(marker):
-        return
     emb = spark.read.parquet(os.path.join(SMALL, "embeddings.parquet"))
     reps = spark.range(R).withColumnRenamed("id", "rep")
     (
@@ -557,10 +526,8 @@ def build_probe_embeddings(spark) -> None:
         .withColumn("vec_id", F.col("vec_id") + F.col("rep") * STRIDE)
         .drop("rep")
         .write.mode("overwrite")
-        .parquet(os.path.join(PROBE_DIR, "embeddings.parquet"))
+        .parquet(os.path.join(probe_dir(), "embeddings.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 def build_skew_embeddings(spark) -> None:
@@ -573,10 +540,7 @@ def build_skew_embeddings(spark) -> None:
     absorb the whole cluster."""
     from pyspark.sql import functions as F
 
-    marker = os.path.join(SKEW_DIR, "_READY_EMB")
-    if os.path.exists(marker):
-        return
-    emb = spark.read.parquet(os.path.join(PROBE_DIR, "embeddings.parquet"))
+    emb = spark.read.parquet(os.path.join(probe_dir(), "embeddings.parquet"))
     jitter = lambda i: (  # noqa: E731 — deterministic per (vec_id, dim)
         F.pmod(F.col("vec_id") * 31 + i, F.lit(97)).cast("double") / 970.0
     )
@@ -591,10 +555,8 @@ def build_skew_embeddings(spark) -> None:
             ),
         )
         .write.mode("overwrite")
-        .parquet(os.path.join(SKEW_DIR, "embeddings.parquet"))
+        .parquet(os.path.join(skew_root(), "embeddings.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 def build_probe_customer(spark) -> None:
@@ -604,9 +566,6 @@ def build_probe_customer(spark) -> None:
 
     from scripts.scale_probe import SMALL, STRIDE
 
-    marker = os.path.join(PROBE_DIR, "_READY_CUST")
-    if os.path.exists(marker):
-        return
     cust = spark.read.parquet(os.path.join(SMALL, "customer.parquet"))
     reps = spark.range(R).withColumnRenamed("id", "rep")
     (
@@ -614,14 +573,12 @@ def build_probe_customer(spark) -> None:
         .withColumn("c_custkey", F.col("c_custkey") + F.col("rep") * STRIDE)
         .drop("rep")
         .write.mode("overwrite")
-        .parquet(os.path.join(PROBE_DIR, "customer.parquet"))
+        .parquet(os.path.join(probe_dir(), "customer.parquet"))
     )
-    with open(marker, "w") as f:
-        f.write("ok")
 
 
 def build_skew_joins(spark) -> str:
-    """Join-skew fixture (own dir — the graph leg's SKEW_DIR lineitem
+    """Join-skew fixture (own dir — the graph leg's skewed lineitem
     redirects supp/part keys): lineitem with l_orderkey redirected to
     the global ``HOT_ORDER`` on ~20% of rows (the fact side of the
     lineitem⋈orders shuffle join collapses onto one join key), orders
@@ -631,13 +588,8 @@ def build_skew_joins(spark) -> str:
     move."""
     from pyspark.sql import functions as F
 
-    join_dir = SKEW_DIR + JOIN_DIR_SUFFIX
-    marker = os.path.join(join_dir, "_READY")
-    if os.path.exists(marker):
-        return join_dir
-    shutil.rmtree(join_dir, ignore_errors=True)
-    os.makedirs(join_dir, exist_ok=True)
-    li = spark.read.parquet(os.path.join(PROBE_DIR, "lineitem.parquet"))
+    join_dir = skew_root() + JOIN_DIR_SUFFIX
+    li = spark.read.parquet(os.path.join(probe_dir(), "lineitem.parquet"))
     hot_li = (F.col("l_orderkey") * 7 + F.col("l_linenumber")) % HOT_MOD == 0
     (
         li.withColumn(
@@ -647,7 +599,7 @@ def build_skew_joins(spark) -> str:
         .write.mode("overwrite")
         .parquet(os.path.join(join_dir, "lineitem.parquet"))
     )
-    orders = spark.read.parquet(os.path.join(PROBE_DIR, "orders.parquet"))
+    orders = spark.read.parquet(os.path.join(probe_dir(), "orders.parquet"))
     (
         orders.withColumn(
             "o_custkey",
@@ -659,11 +611,9 @@ def build_skew_joins(spark) -> str:
         .parquet(os.path.join(join_dir, "orders.parquet"))
     )
     shutil.copytree(
-        os.path.join(PROBE_DIR, "customer.parquet"),
+        os.path.join(probe_dir(), "customer.parquet"),
         os.path.join(join_dir, "customer.parquet"),
     )
-    with open(marker, "w") as f:
-        f.write("ok")
     return join_dir
 
 
@@ -718,11 +668,11 @@ def _run_leg(
     """Shared uniform-vs-skewed measurement loop + markdown table."""
     from mqtt2clickhouse_spark.queries import QUERIES
 
-    skew_dir = skew_dir or SKEW_DIR
+    skew_dir = skew_dir or skew_root()
     rows = []
     for name in names:
         fn = QUERIES[name].spark_fn
-        t_uni = time_noop(spark, fn, PROBE_DIR)
+        t_uni = time_noop(spark, fn, probe_dir())
         release(spark)
         t_skew = time_noop(spark, fn, skew_dir)
         release(spark)
@@ -744,7 +694,7 @@ def run_events_leg(spark) -> None:
 
     print("building skewed events ...", file=sys.stderr)
     build_skew_events(spark)
-    ev = spark.read.parquet(os.path.join(SKEW_DIR, "events.parquet"))
+    ev = spark.read.parquet(os.path.join(skew_root(), "events.parquet"))
     tot, hot = ev.agg(
         F.count(F.lit(1)), F.sum((F.col("user_id") == HOT_USER).cast("long"))
     ).first()
@@ -769,7 +719,7 @@ def run_emb_leg(spark) -> None:
     build_probe_embeddings(spark)
     print("building skewed embeddings ...", file=sys.stderr)
     build_skew_embeddings(spark)
-    emb = spark.read.parquet(os.path.join(SKEW_DIR, "embeddings.parquet"))
+    emb = spark.read.parquet(os.path.join(skew_root(), "embeddings.parquet"))
     tot, hot = emb.agg(
         F.count(F.lit(1)),
         F.sum((F.col("vec_id") % 10 < HOT_VEC_MOD).cast("long")),
@@ -811,17 +761,17 @@ def run_docs_leg(spark) -> None:
             t(spark, d, "documents"), d).count()),
     ):
         ts = {}
-        for d in (PROBE_DIR, SKEW_DIR):
+        for d in (probe_dir(), skew_root()):
             start = time.perf_counter()
             build(d)
             ts[d] = time.perf_counter() - start
             release(spark)
-        builds[label] = (ts[PROBE_DIR], ts[SKEW_DIR])
+        builds[label] = (ts[probe_dir()], ts[skew_root()])
         print(
-            f"{label}: uniform {ts[PROBE_DIR]:.2f}s  skewed {ts[SKEW_DIR]:.2f}s",
+            f"{label}: uniform {ts[probe_dir()]:.2f}s  skewed {ts[skew_root()]:.2f}s",
             file=sys.stderr,
         )
-    sh = shingle_store(t(spark, SKEW_DIR, "documents"), SKEW_DIR)
+    sh = shingle_store(t(spark, skew_root(), "documents"), skew_root())
     hot_df = (
         sh.groupBy("shingle").count().orderBy(F.desc("count")).limit(3)
     ).collect()
@@ -836,9 +786,9 @@ def run_docs_leg(spark) -> None:
     rows = []
     for name in DOC_QUERY_NAMES:
         fn = QUERIES[name].spark_fn
-        t_uni = time_noop(spark, fn, PROBE_DIR)
+        t_uni = time_noop(spark, fn, probe_dir())
         release(spark)
-        t_skew = time_noop(spark, fn, SKEW_DIR)
+        t_skew = time_noop(spark, fn, skew_root())
         release(spark)
         rows.append((name, t_uni, t_skew, t_skew / t_uni))
         print(
@@ -915,14 +865,14 @@ def main() -> None:
         ("cop_store", lambda d: _copurchase_edges(spark, d).count()),
     ):
         ts = {}
-        for d in (PROBE_DIR, SKEW_DIR):
+        for d in (probe_dir(), skew_root()):
             start = time.perf_counter()
             build(d)
             ts[d] = time.perf_counter() - start
             release(spark)
-        builds[label] = (ts[PROBE_DIR], ts[SKEW_DIR])
+        builds[label] = (ts[probe_dir()], ts[skew_root()])
         print(
-            f"{label}: uniform {ts[PROBE_DIR]:.2f}s  skewed {ts[SKEW_DIR]:.2f}s",
+            f"{label}: uniform {ts[probe_dir()]:.2f}s  skewed {ts[skew_root()]:.2f}s",
             file=sys.stderr,
         )
 
@@ -930,7 +880,7 @@ def main() -> None:
     # supplier node) — AFTER the timed builds, so the build numbers are
     # cold for BOTH fixtures instead of this read pre-building the
     # skewed store
-    edges = _weighted_pairs(spark, SKEW_DIR)
+    edges = _weighted_pairs(spark, skew_root())
     hot_node = f"s{HOT_SUPP}"
     tot, hot_e = edges.agg(
         F.count(F.lit(1)), F.sum((F.col("s") == hot_node).cast("long"))
@@ -945,9 +895,9 @@ def main() -> None:
     rows = []
     for name in QUERY_NAMES:
         fn = QUERIES[name].spark_fn
-        t_uni = time_noop(spark, fn, PROBE_DIR)
+        t_uni = time_noop(spark, fn, probe_dir())
         release(spark)
-        t_skew = time_noop(spark, fn, SKEW_DIR)
+        t_skew = time_noop(spark, fn, skew_root())
         release(spark)
         rows.append((name, t_uni, t_skew, t_skew / t_uni))
         print(

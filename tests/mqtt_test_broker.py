@@ -5,8 +5,8 @@ reference).
 Speaks the real wire format over real TCP (optionally TLS/mTLS), using
 the shared codec from ``mqtt2clickhouse_spark.streaming.mqtt_wire``.
 Records everything tests need to assert: authenticated username, the
-exact (filter, qos) subscriptions, and PUBACKs received for QoS-1
-deliveries.
+exact (filter, qos) subscriptions, PUBACKs received for QoS-1
+deliveries, and which sessions are still open.
 """
 
 from __future__ import annotations
@@ -52,6 +52,7 @@ class _Session:
         self.username: str | None = None
         self.subscriptions: list[tuple[str, int]] = []
         self.lock = threading.Lock()  # serialize writes (loop vs publish)
+        self.closed = False  # set once the client has gone
 
 
 class MiniBroker:
@@ -151,12 +152,17 @@ class MiniBroker:
         except (ConnectionError, OSError, ValueError):
             return
         finally:
+            sess.closed = True
             try:
                 sock.close()
             except OSError:
                 pass
 
     # -- test API --------------------------------------------------------
+    def open_sessions(self) -> int:
+        """Accepted sessions whose client has not disconnected yet."""
+        return sum(not sess.closed for sess in self.sessions)
+
     def publish(self, topic: str, payload: bytes, qos: int = 0) -> list[int]:
         """Deliver to every matching subscription; returns the QoS-1
         packet ids sent (for PUBACK assertions)."""

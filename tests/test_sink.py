@@ -93,6 +93,45 @@ def test_registry_persists_across_instances(spark, tmp_path):
     assert not sink2.registry.accepts("t1", "String")
 
 
+def test_registry_is_saved_before_the_accepted_write(spark, tmp_path, monkeypatch):
+    """DDL before INSERT (db/db.go:226-243, then :246-271).  A death
+    between the registry save and the write may leave a registered table
+    with no rows, never rows of a table the registry lacks: otherwise the
+    next batch could register that table with the other type, and one
+    partition would hold both."""
+    import os
+
+    w = str(tmp_path / "wh")
+    real_save = SchemaRegistry.save
+    saves = []
+
+    def dying_save(self, path):
+        saves.append(path)
+        if len(saves) == 1:
+            raise RuntimeError("process died during the registry save")
+        real_save(self, path)
+
+    monkeypatch.setattr(SchemaRegistry, "save", dying_save)
+
+    def batch(payload):
+        df = spark.createDataFrame(
+            [("/c/d/out/s/t1", payload)], "topic string, payload string"
+        )
+        return parse_messages(df)
+
+    with pytest.raises(RuntimeError, match="registry save"):
+        DemuxSink(spark, w).write_batch(*batch('{"value": 1.0}'))
+    DemuxSink(spark, w).write_batch(*batch('{"value": "on"}'))  # a restart
+    types = (
+        spark.read.parquet(os.path.join(w, "readings"))
+        .filter(F.col("table_name") == "t1")
+        .select("value_type")
+        .distinct()
+        .collect()
+    )
+    assert [r["value_type"] for r in types] == ["String"]
+
+
 def test_compact_reduces_files_preserves_data(spark, tmp_path):
     """Many small appended batches → compact → fewer files, same rows."""
     import json as _json

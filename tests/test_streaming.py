@@ -642,34 +642,34 @@ def test_daemon_entrypoint_fake_source(tmp_path):
     assert (wh / "readings").exists()
 
 
-def test_mqtt_source_partitioned_reader(spark, tmp_path):
-    """DataSourceStreamReader path: per-batch offset ranges split into
-    InputPartitions read on executors; same rows as the simple reader."""
-    register_mqtt_source(spark)
-    stream = (
-        spark.readStream.format("mqtt")
-        .option("mode", "fake")
-        .option("partitioned", "true")
-        .option("n_partitions", "4")
-        .option("batch_size", "40")
-        .option("max_messages", "120")
-        .load()
+def test_daemon_exits_when_its_query_dies(tmp_path):
+    """A query that dies ends the daemon: with no broker on the port the
+    live source's first read raises, and the daemon prints the error and
+    exits non-zero long before ``--max-runtime``.  (Its poll loop tests
+    ``exception()``, not ``isActive``, so a topic reload, which stops the
+    old query on purpose, does not end it.)"""
+    import os
+    import subprocess
+    import sys
+
+    proc = subprocess.run(
+        [
+            sys.executable, "-m", "mqtt2clickhouse_spark",
+            "--broker", "127.0.0.1",
+            "--port", "1",  # closed: the connect is refused
+            "--warehouse", str(tmp_path / "wh"),
+            "--trigger", "1 seconds",
+            "--cpus", "2",
+            "--max-runtime", "300",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=240,  # raises well before --max-runtime would end it
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
-    rows = []
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, eid: rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert len(rows) == 120
-    assert sorted(r["seq"] for r in rows) == list(range(120))
-    # deterministic generator contract holds across partition boundaries
-    by_seq = {r["seq"]: r for r in rows}
-    assert by_seq[0]["topic"] == "/client0/dev0/out/sensors/temp_out"
-    assert by_seq[2]["payload"] == '{"value": "off"}'
+    assert proc.returncode != 0
+    assert "ingest query failed" in proc.stderr
+    assert "Connection refused" in proc.stderr or "ConnectionRefusedError" in proc.stderr
 
 
 def test_source_admission_control(spark, tmp_path):
@@ -862,7 +862,10 @@ def test_live_reader_passes_certs_to_tls_set(monkeypatch, tmp_path):
     """Construct LiveMqttStreamReader against a fake paho module and
     assert the client got tls_set(ca_certs=, certfile=, keyfile=) plus
     the QoS-1 subscription — the wiring the reference does in
-    SetTLSSettings (client.go:56-83) without needing a broker."""
+    SetTLSSettings (client.go:56-83) without needing a broker.  The
+    constructor touches no client and the reader pickles (Spark's
+    planner ships its own copy); the first ``read`` connects."""
+    import pickle
     import sys
     import types
 
@@ -911,6 +914,10 @@ def test_live_reader_passes_certs_to_tls_set(monkeypatch, tmp_path):
             "topics": json.dumps({"a": "/+/d/out/#", "b": "/c/+/out/#"}),
         }
     )
+    assert calls == {}
+    pickle.loads(pickle.dumps(reader))
+    rows, off = reader.read({"seq": 0})
+    assert list(rows) == [] and off == {"seq": 0}
     assert calls["tls"] == {
         "ca_certs": "/ca.pem", "certfile": "/cert.pem", "keyfile": "/key.pem"
     }
@@ -924,9 +931,9 @@ def test_live_reader_protocol_loopback(monkeypatch):
     """Protocol-level exercise of LiveMqttStreamReader WITHOUT a broker:
     a fake paho client delivers messages through the real ``_on_message``
     → bounded buffer → ``read()`` path, and ``readBetweenOffsets``
-    re-serves committed ranges from the retained replay window.  This is
-    the buffered at-least-once behavior the reference implements with
-    its QoS-1 subscription + 300-slot channel
+    re-serves nothing (MQTT keeps no log, and the reader keeps no replay
+    window).  This is the buffered QoS-1 subscription + 300-slot channel
+    the reference implements
     (/root/reference/client/client.go:115-148,
     /root/reference/message/message.go:17)."""
     import sys
@@ -970,6 +977,7 @@ def test_live_reader_protocol_loopback(monkeypatch):
         {"broker": "broker.example", "port": "1883", "topics": "/a/#",
          "batch_size": "5"}
     )
+    reader._connect()
     # the buffer bound IS the reference's channel capacity: a full queue
     # blocks the paho network thread — backpressure, not message loss
     assert reader.buffer.maxsize == BUFFER_CAPACITY == 300
@@ -1003,10 +1011,8 @@ def test_live_reader_protocol_loopback(monkeypatch):
     assert off2 == {"seq": 7}
     assert rows2[1][1] == "�"  # replacement char, message kept
 
-    # commit-time retry: the retained window replays the exact rows
-    replay = list(reader.readBetweenOffsets({"seq": 0}, {"seq": 7}))
-    assert [r[2] for r in replay] == list(range(7))
-    assert [r[:2] for r in replay[:5]] == [r[:2] for r in rows]
+    # no replay window: a re-read of planned offsets comes back empty
+    assert list(reader.readBetweenOffsets({"seq": 0}, {"seq": 7})) == []
 
     # an empty poll advances nothing
     rows3, off3 = reader.read(off2)
@@ -1043,9 +1049,11 @@ def _fake_paho_live_reader(monkeypatch):
     monkeypatch.setitem(sys.modules, "paho.mqtt.client", fake_client_mod)
     from mqtt2clickhouse_spark.streaming.mqtt_source import LiveMqttStreamReader
 
-    return LiveMqttStreamReader(
+    reader = LiveMqttStreamReader(
         {"broker": "broker.example", "port": "1883", "topics": "/a/#"}
     )
+    reader._connect()
+    return reader
 
 
 def _deliver_in_background(reader, n):
@@ -1217,29 +1225,6 @@ def test_ingest_stream_spreads_accepted_write_over_cores(spark, tmp_path):
     per_table = Counter(os.path.basename(os.path.dirname(f)) for f in files)
     assert per_table == {f"table_name=t{i}": 1 for i in range(n_tables)}
     assert spark.conf.get(min_size) == before
-
-
-def test_live_reader_replays_a_large_batch_until_commit(monkeypatch):
-    """A time-bounded batch can hold more rows than any fixed replay
-    window: one read of more than 10 x BUFFER_CAPACITY rows must replay
-    in full until Spark commits it, and the commit empties the window
-    of every row it covers."""
-    from mqtt2clickhouse_spark.streaming.mqtt_source import BUFFER_CAPACITY
-
-    reader = _fake_paho_live_reader(monkeypatch)
-    n = 10 * BUFFER_CAPACITY + 500
-    producer = _deliver_in_background(reader, n)
-    rows, off = reader.read({"seq": 0})
-    rows = list(rows)
-    producer.join(timeout=10)
-    assert not producer.is_alive()
-    assert len(rows) > 10 * BUFFER_CAPACITY
-    assert off == {"seq": len(rows)}
-
-    assert list(reader.readBetweenOffsets({"seq": 0}, off)) == rows
-    reader.commit(off)
-    assert reader._replay == {}
-    assert list(reader.readBetweenOffsets({"seq": 0}, off)) == []
 
 
 # ---------------------------------------------------------------------------
@@ -1814,6 +1799,7 @@ def test_live_mqtt_reader_end_to_end_over_real_tcp(monkeypatch):
                 "batch_size": "10",
             }
         )
+        reader._connect()
         # wait for the (async) SUBSCRIBEs to land broker-side
         deadline = _time.monotonic() + 5
         while _time.monotonic() < deadline and (
@@ -1854,7 +1840,6 @@ def test_live_mqtt_reader_end_to_end_over_real_tcp(monkeypatch):
         broker.close()
 
 
-@pytest.mark.xfail(strict=True, reason="ROADMAP item 3: seq restarts at 0")
 def test_live_reader_seq_resumes_from_checkpointed_start(monkeypatch):
     """A restarted stream hands a fresh reader the checkpointed offset as
     ``start``.  The rows it reads must number on from there; a seq that
@@ -1874,6 +1859,7 @@ def test_live_reader_seq_resumes_from_checkpointed_start(monkeypatch):
         reader = LiveMqttStreamReader(
             {"broker": "127.0.0.1", "port": str(broker.port), "topics": "/client0/#"}
         )
+        reader._connect()
         deadline = _time.monotonic() + 5
         while _time.monotonic() < deadline and (
             not broker.sessions or not broker.sessions[0].subscriptions
@@ -1883,10 +1869,11 @@ def test_live_reader_seq_resumes_from_checkpointed_start(monkeypatch):
         rows = []
         deadline = _time.monotonic() + 10
         while not rows and _time.monotonic() < deadline:
-            batch, _ = reader.read({"seq": 1000})
+            batch, end = reader.read({"seq": 1000})
             rows = list(batch)
         assert len(rows) == 1
         assert rows[0][2] >= 1000
+        assert rows[0][2] == 1000 and end == {"seq": 1001}
     finally:
         if reader is not None:
             reader.client.disconnect()
@@ -1919,6 +1906,7 @@ def test_live_mqtt_reader_reconnects_after_loop_death(monkeypatch):
                 "batch_size": "10",
             }
         )
+        reader._connect()
         deadline = _time.monotonic() + 5
         while _time.monotonic() < deadline and (
             not broker.sessions or not broker.sessions[0].subscriptions
@@ -2093,14 +2081,15 @@ def test_connect_failure_after_handshake_closes_socket(monkeypatch):
     monkeypatch.setattr(mqtt_wire.Client, "subscribe", failing_subscribe)
     broker = MiniBroker()
     try:
+        reader = LiveMqttStreamReader(
+            {
+                "broker": "127.0.0.1",
+                "port": str(broker.port),
+                "topics": json.dumps({"a": "/client0/#"}),
+            }
+        )
         with pytest.raises(OSError):
-            LiveMqttStreamReader(
-                {
-                    "broker": "127.0.0.1",
-                    "port": str(broker.port),
-                    "topics": json.dumps({"a": "/client0/#"}),
-                }
-            )
+            reader.read({"seq": 0})
         assert created, "failing subscribe was never reached"
         assert created[0]._sock is None, (
             "half-connected client leaked its socket after _connect failed"
@@ -2188,16 +2177,17 @@ def test_live_mqtt_reader_rejects_bad_credentials(monkeypatch):
 
     broker = MiniBroker(username="u", password="p")
     try:
+        reader = LiveMqttStreamReader(
+            {
+                "broker": "127.0.0.1",
+                "port": str(broker.port),
+                "username": "u",
+                "password": "WRONG",
+                "topics": "/a/#",
+            }
+        )
         with _pytest.raises(ConnectionError, match="return code 4"):
-            LiveMqttStreamReader(
-                {
-                    "broker": "127.0.0.1",
-                    "port": str(broker.port),
-                    "username": "u",
-                    "password": "WRONG",
-                    "topics": "/a/#",
-                }
-            )
+            reader.read({"seq": 0})
     finally:
         broker.close()
 
@@ -2283,6 +2273,7 @@ def test_live_mqtt_reader_mtls_end_to_end(monkeypatch, tmp_path):
                 "batch_size": "5",
             }
         )
+        reader._connect()
         deadline = _time.monotonic() + 5
         while _time.monotonic() < deadline and (
             not broker.sessions or not broker.sessions[0].subscriptions
@@ -2336,16 +2327,16 @@ def test_topic_hot_reload_resubscribes_live_reader(monkeypatch, tmp_path):
     readers = []
 
     def make_reader(topic_map):
-        readers.append(
-            LiveMqttStreamReader(
-                {
-                    "broker": "127.0.0.1",
-                    "port": str(broker.port),
-                    "topics": json.dumps(topic_map),
-                    "batch_size": "10",
-                }
-            )
+        reader = LiveMqttStreamReader(
+            {
+                "broker": "127.0.0.1",
+                "port": str(broker.port),
+                "topics": json.dumps(topic_map),
+                "batch_size": "10",
+            }
         )
+        reader._connect()
+        readers.append(reader)
 
     watcher = None
     try:
@@ -2773,10 +2764,10 @@ def test_session_window_random_schedules_match_simulation(spark, tmp_path):
 
 def test_live_mqtt_through_spark_streaming_to_demux_sink(spark, tmp_path):
     """The LAST integration inch, end-to-end: a REAL Structured
-    Streaming query over the LIVE mqtt data source (Spark's planner
-    instantiates LiveMqttStreamReader in its own driver-side Python
-    worker, which speaks the wire protocol over real TCP to the
-    in-process broker) → parse → DemuxSink — published sensor messages
+    Streaming query over the LIVE mqtt data source (Spark's source
+    runner instantiates LiveMqttStreamReader in its own driver-side
+    Python worker, whose first read speaks the wire protocol over real
+    TCP to the in-process broker) → parse → DemuxSink — published sensor messages
     must land in their routed tables with parsed values.  Everything
     between 'paho-compatible client API' and 'rows in the warehouse'
     runs exactly as production would."""
@@ -2850,6 +2841,147 @@ def test_live_mqtt_through_spark_streaming_to_demux_sink(spark, tmp_path):
         assert vals[0] >= 20.0 and vals[-1] <= 59.0
     finally:
         broker.close()
+
+
+def test_live_source_restart_on_one_checkpoint(spark, tmp_path):
+    """Delivery across stop, restart and crash on the LIVE path:
+    ``run_ingest_stream`` over the mqtt source on a real TCP broker, one
+    checkpoint, five queries in turn.
+
+    - A running query holds exactly one broker session (Spark's planner
+      builds a second reader that must never connect), and none is left
+      once the query has stopped or died.
+    - A restarted query numbers its rows on from the checkpointed end
+      offset, so no seq is ever written twice.
+    - A failure after the sink write and before the checkpoint commit:
+      the restart re-runs the batch empty, so its rows are written
+      exactly once.
+    - A failure before the sink write: the batch's rows are lost, since
+      MQTT keeps no log and the messages were PUBACKed on receipt."""
+    import glob
+    import os
+    from collections import Counter
+
+    from mqtt_test_broker import MiniBroker
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    wh, ckpt = str(tmp_path / "wh"), str(tmp_path / "ckpt")
+    sink = DemuxSink(spark, wh)
+    register_mqtt_source(spark)
+    broker = MiniBroker()
+
+    class ChaosSink:
+        """Records each batch's (seq, value) rows; can fail the first
+        batch with rows before or after the real sink write."""
+
+        def __init__(self, fail=None):
+            self.fail, self.batches = fail, []
+
+        def foreach_batch(self, df, epoch_id):
+            rows = sorted(
+                (r["seq"], json.loads(r["payload"])["value"]) for r in df.collect()
+            )
+            self.batches.append(rows)
+            if rows and self.fail == "before":
+                raise RuntimeError("injected failure before the sink write")
+            sink.foreach_batch(df, epoch_id)
+            if rows and self.fail == "after":
+                raise RuntimeError("injected failure before the checkpoint commit")
+
+        def seqs(self):
+            return [seq for rows in self.batches for seq, _ in rows]
+
+        def values(self):
+            return {v for rows in self.batches for _, v in rows}
+
+    def wait_for(cond, what, timeout=90):
+        deadline = time.monotonic() + timeout
+        while not cond():
+            assert time.monotonic() < deadline, what
+            time.sleep(0.1)
+
+    def end_of(kind):
+        """End offset of the last batch in the offset log ("offsets")
+        or of the last committed one ("commits")."""
+        log = os.path.join(ckpt, kind)
+        ids = [int(f) for f in os.listdir(log) if f.isdigit()] if os.path.isdir(log) else []
+        if not ids:
+            return 0
+        with open(os.path.join(ckpt, "offsets", str(max(ids)))) as fh:
+            return json.loads(fh.read().splitlines()[-1])["seq"]
+
+    def start(chaos):
+        stream = (
+            spark.readStream.format("mqtt")
+            .option("broker", "127.0.0.1")
+            .option("port", str(broker.port))
+            .option("topics", json.dumps({"a": "/c0/#"}))
+            .load()
+        )
+        q = run_ingest_stream(stream, chaos, ckpt, trigger_interval="1 seconds")
+        wait_for(
+            lambda: any(s.subscriptions and not s.closed for s in broker.sessions),
+            "the live reader never subscribed",
+        )
+        return q
+
+    def publish(values):
+        for v in values:
+            broker.publish(
+                "/c0/dev0/out/sensors/temp_out", json.dumps({"value": v}).encode(), qos=1
+            )
+
+    def run_to_commit(values):
+        """One clean query: publish, wait until every value is committed,
+        check the sessions, stop."""
+        chaos = ChaosSink()
+        start_seq = end_of("offsets")
+        q = start(chaos)
+        publish(values)
+        wait_for(lambda: set(values) <= chaos.values(), "published rows never read")
+        wait_for(lambda: end_of("commits") > max(chaos.seqs()), "batches never committed")
+        assert broker.open_sessions() == 1
+        q.stop()
+        wait_for(lambda: broker.open_sessions() == 0, "a session outlived q.stop()", 30)
+        assert min(chaos.seqs()) >= start_seq
+        return chaos
+
+    def run_to_failure(fail, values):
+        chaos = ChaosSink(fail)
+        start_seq = end_of("offsets")
+        q = start(chaos)
+        publish(values)
+        with pytest.raises(StreamingQueryException, match="injected failure"):
+            q.awaitTermination(120)
+        wait_for(lambda: broker.open_sessions() == 0, "a session outlived the query", 30)
+        failed = [rows for rows in chaos.batches if rows][-1]
+        assert min(seq for seq, _ in failed) >= start_seq
+        return {v for _, v in failed}
+
+    try:
+        run_to_commit(range(0, 10))
+        written_once = run_to_failure("after", range(10, 20))
+        restarted = run_to_commit(range(20, 30))
+        # the failed batch re-ran first, and re-read nothing
+        assert restarted.batches[0] == []
+        lost = run_to_failure("before", range(30, 40))
+        restarted = run_to_commit(range(40, 50))
+        assert restarted.batches[0] == []
+    finally:
+        broker.close()
+
+    assert written_once and lost
+    readings = spark.read.parquet(os.path.join(wh, "readings"))
+    seqs = [r["seq"] for r in readings.select("seq").collect()]
+    assert max(Counter(seqs).values()) == 1, "a seq was written twice"
+    values = Counter(
+        int(r["value"]) for r in sink.read_table("temp_out").collect()
+    )
+    assert max(values.values()) == 1, "a row was written twice"
+    assert set(range(0, 10)) | set(range(20, 30)) | set(range(40, 50)) <= set(values)
+    assert written_once <= set(values), "the batch written before the failure was lost"
+    assert not lost & set(values), "a batch that failed before its write came back"
+    assert glob.glob(os.path.join(wh, "readings", "table_name=temp_out", "*.parquet"))
 
 
 def test_crash_midbatch_replay_is_at_least_once(spark, tmp_path):
