@@ -1872,7 +1872,6 @@ def test_live_reader_seq_resumes_from_checkpointed_start(monkeypatch):
             batch, end = reader.read({"seq": 1000})
             rows = list(batch)
         assert len(rows) == 1
-        assert rows[0][2] >= 1000
         assert rows[0][2] == 1000 and end == {"seq": 1001}
     finally:
         if reader is not None:
@@ -2858,7 +2857,6 @@ def test_live_source_restart_on_one_checkpoint(spark, tmp_path):
       exactly once.
     - A failure before the sink write: the batch's rows are lost, since
       MQTT keeps no log and the messages were PUBACKed on receipt."""
-    import glob
     import os
     from collections import Counter
 
@@ -2869,6 +2867,7 @@ def test_live_source_restart_on_one_checkpoint(spark, tmp_path):
     sink = DemuxSink(spark, wh)
     register_mqtt_source(spark)
     broker = MiniBroker()
+    queries = []
 
     class ChaosSink:
         """Records each batch's (seq, value) rows; can fail the first
@@ -2919,6 +2918,7 @@ def test_live_source_restart_on_one_checkpoint(spark, tmp_path):
             .load()
         )
         q = run_ingest_stream(stream, chaos, ckpt, trigger_interval="1 seconds")
+        queries.append(q)
         wait_for(
             lambda: any(s.subscriptions and not s.closed for s in broker.sessions),
             "the live reader never subscribed",
@@ -2968,6 +2968,8 @@ def test_live_source_restart_on_one_checkpoint(spark, tmp_path):
         restarted = run_to_commit(range(40, 50))
         assert restarted.batches[0] == []
     finally:
+        for q in queries:
+            q.stop()
         broker.close()
 
     assert written_once and lost
@@ -2981,7 +2983,6 @@ def test_live_source_restart_on_one_checkpoint(spark, tmp_path):
     assert set(range(0, 10)) | set(range(20, 30)) | set(range(40, 50)) <= set(values)
     assert written_once <= set(values), "the batch written before the failure was lost"
     assert not lost & set(values), "a batch that failed before its write came back"
-    assert glob.glob(os.path.join(wh, "readings", "table_name=temp_out", "*.parquet"))
 
 
 def test_crash_midbatch_replay_is_at_least_once(spark, tmp_path):
